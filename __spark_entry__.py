@@ -507,10 +507,13 @@ _GATE_RESERVE = [
 
 
 def _reorder_gates(d: dict) -> dict:
-    front = [k for k in _GATE_FRONT if k in d]
-    reserve = [k for k in _GATE_RESERVE if k in d]
+    # a renamed or deleted gate must fail loudly here, not silently
+    # drop out of the window the two lists allocate
+    assert not set(_GATE_FRONT) & set(_GATE_RESERVE), "front/reserve overlap"
+    missing = [k for k in _GATE_FRONT + _GATE_RESERVE if k not in d]
+    assert not missing, f"front/reserve name unknown gates: {missing}"
     mid = [k for k in d if k not in _GATE_FRONT and k not in _GATE_RESERVE]
-    return {k: d[k] for k in front + mid + reserve}
+    return {k: d[k] for k in _GATE_FRONT + mid + _GATE_RESERVE}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1904,5 +1907,6 @@ def oracle_sql() -> dict[str, str]:
         """,
     }
     # mirror queries()' exact entry order (not just the front/reserve
-    # split) so the two dicts stay positionally aligned
-    return {k: base[k] for k in queries()}
+    # split) so the two dicts stay positionally aligned; a rows-only
+    # gate (no oracle SQL) is simply absent here
+    return {k: base[k] for k in queries() if k in base}

@@ -42,12 +42,9 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hunt_spark.functions.analysis import TOKEN_PATTERN_PY
-from hunt_spark.functions.varbyte import delta_varbyte_encode
 from hunt_spark.sources.catalog import IndexCatalog
 
 BM25_K1 = 1.2
@@ -69,8 +66,8 @@ class BuildConfig:
     context_types: dict[str, str] = field(default_factory=dict)
     build_blocks: bool = True
     build_term_dict: bool = True  # front-coded term dictionary artifact
-    # context columns are raw html binary; extraction runs fused inside
-    # the tokenize kernel (one Arrow pass, not two python stages)
+    # context columns are raw html binary; a vectorized Arrow UDF
+    # extracts the text before the JVM tokenizer
     extract_html: bool = False
     # per-context extraction selectors (html-hunter "-c cx:xpath",
     # HtmlHunter.hs:107-142,288-340): context name -> "title" |
@@ -96,37 +93,12 @@ class BuildConfig:
     # Schema.hs:77-92): tokens are the regex's matches in document
     # order (scanTextRE, empties dropped) instead of the default scan
     # (\w+ for text contexts, whitespace for typed ones). The regex
-    # runs JVM-side (regexp_extract_all) and in the python kernel, so
-    # it must stay in the Java/Python-common syntax (no backrefs
-    # needed by the reference defaults — REFERENCE_SCAN_REGEXES in
+    # runs JVM-side (regexp_extract_all) and in its Python reference
+    # (scan_py, which the tests compare against), so it must stay in
+    # the Java/Python-common syntax (no backrefs needed by the
+    # reference defaults — REFERENCE_SCAN_REGEXES in
     # functions.analysis carries the Schema.hs:125-179 per-type set).
     context_regexes: dict[str, str] = field(default_factory=dict)
-    # Inversion strategy — all measured at 500k docs / 43M postings:
-    # "arrow" (default): tokenize JVM-side (whole-stage-codegen
-    #   regexp_extract_all), ship list<string> token arrays through
-    #   Arrow into a mapInArrow kernel that never materializes Python
-    #   string objects — dictionary_encode/take run in Arrow C++, the
-    #   fold is numpy over index arrays, outputs are zero-copy Arrow
-    #   ListArrays. Cuts the Python-object churn the round-1 scaling
-    #   bench blamed for the postings stage's memory-bandwidth wall.
-    # "python": Arrow mapInPandas kernel, regex + one factorize +
-    #   lexsort per batch over pandas object columns; also the fused
-    #   html→text path (extraction and inversion in one Arrow pass).
-    # "jvm": posexplode + groupBy(collect_list) — fully codegen'd but
-    #   the 65M-token collect_list aggregation is object/GC-bound
-    #   (198s at local[32]); kept as a cross-check oracle for the
-    #   kernels (equivalence pinned by test).
-    invert_strategy: str = "arrow"
-    # Blocks pack kernel — "arrow" (default): whole-batch Arrow/numpy
-    # pack, zero-copy Binary/List outputs, no pandas object columns;
-    # "python": the pandas per-group kernel (equivalence pinned by test)
-    pack_strategy: str = "arrow"
-    # Pack-stage shuffle width. 0 = auto (2x cluster parallelism). The
-    # pack repartition key carries a term-level sub-bucket, so the
-    # stage's parallelism is NOT capped at n_contexts x n_shards — the
-    # round-2 layout packed a 32-core run in <= 8 tasks and anti-scaled
-    # (90.4 s @local[8] -> 105.3 s @local[32]).
-    pack_partitions: int = 0
 
 
 POSTINGS_SCHEMA = (
@@ -158,7 +130,7 @@ def _text_chains(cfg: BuildConfig) -> dict[str, list]:
     }
 
 
-def _tokenize_expr(cfg: BuildConfig | None):
+def _tokenize_expr(cfg: BuildConfig):
     """Per-context tokenizer over the stacked (context, text) frame:
     the default \\w+ scan, with scanTextRE branches for contexts
     carrying a cxRegEx override and normalize' folds for contexts
@@ -171,8 +143,6 @@ def _tokenize_expr(cfg: BuildConfig | None):
     )
 
     default = tokenize_col(F.col("text"))
-    if cfg is None:
-        return default
     scans = _text_scan_overrides(cfg)
     chains = _text_chains(cfg)
     expr = default
@@ -192,102 +162,6 @@ def _tokenize_expr(cfg: BuildConfig | None):
     return expr
 
 
-def _make_invert(
-    extract_html: bool,
-    scan_pats: dict[str, str] | None = None,
-    chains: dict[str, list] | None = None,
-    skip_extract_cxs: frozenset | None = None,
-):
-    """Batch-vectorized tokenize + invert kernel (optionally fused with
-    HTML text extraction — one Arrow round-trip instead of two python
-    stages).
-
-    One factorize + lexsort per Arrow batch replaces a per-document
-    argsort loop; positions are 1-based over the surviving token stream
-    (Hunt Analyze.hs:74-84 ``zip [1..]``) and stay ascending per
-    (doc, term) because lexsort is stable.
-    """
-    from hunt_spark.functions.analysis import _extract_one
-
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = pd.DataFrame(
-            {
-                "doc_id": pd.Series([], dtype="int64"),
-                "context": pd.Series([], dtype=object),
-                "term": pd.Series([], dtype=object),
-                "tf": pd.Series([], dtype="int32"),
-                "positions": pd.Series([], dtype=object),
-                "dl": pd.Series([], dtype="int32"),
-            }
-        )
-        for b in batches:
-            texts = b["text"]
-            if extract_html:
-                # typed-context rows arrive already extracted+normalized
-                skip = skip_extract_cxs or frozenset()
-                texts = [
-                    (
-                        t.decode() if isinstance(t, (bytes, bytearray)) else t
-                    ) if cx in skip else _extract_one(t)
-                    for cx, t in zip(b["context"], texts)
-                ]
-            if scan_pats or chains:
-                from hunt_spark.functions.analysis import (
-                    chain_norm_py,
-                    scan_py,
-                )
-
-                sp, ch = scan_pats or {}, chains or {}
-                toks = [
-                    scan_py(t, sp[cx])
-                    if cx in sp
-                    else (TOKEN_PATTERN_PY.findall(t) if t else [])
-                    for cx, t in zip(b["context"], texts)
-                ]
-                if ch:
-                    toks = [
-                        [
-                            w
-                            for tok in ts
-                            if (w := chain_norm_py(tok, ch[cx])) is not None
-                        ]
-                        if cx in ch
-                        else ts
-                        for cx, ts in zip(b["context"], toks)
-                    ]
-            else:
-                toks = [TOKEN_PATTERN_PY.findall(t) if t else [] for t in texts]
-            lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
-            total = int(lens.sum())
-            if total == 0:
-                yield empty
-                continue
-            flat = np.concatenate([np.asarray(t, dtype=object) for t in toks if t])
-            doc_idx = np.repeat(np.arange(len(toks)), lens)
-            starts_per_doc = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            pos1 = (np.arange(total) - starts_per_doc[doc_idx] + 1).astype(np.int32)
-            codes, uniq_terms = pd.factorize(flat)
-            order = np.lexsort((codes, doc_idx))  # by doc, then term
-            d_s, c_s = doc_idx[order], codes[order]
-            brk = np.flatnonzero((d_s[1:] != d_s[:-1]) | (c_s[1:] != c_s[:-1]))
-            g_start = np.concatenate(([0], brk + 1))
-            g_end = np.concatenate((brk + 1, [total]))
-            head = order[g_start]
-            pos_sorted = pos1[order]
-            yield pd.DataFrame(
-                {
-                    "doc_id": b["doc_id"].to_numpy()[doc_idx[head]],
-                    "context": b["context"].to_numpy()[doc_idx[head]],
-                    "term": uniq_terms[c_s[g_start]],
-                    "tf": (g_end - g_start).astype(np.int32),
-                    "positions": np.split(pos_sorted, g_end[:-1]),
-                    "dl": lens[doc_idx[head]].astype(np.int32),
-                }
-            )
-
-    return go
-
-
 def _invert_arrow(tokenized: DataFrame) -> DataFrame:
     """Arrow-native inversion over JVM-tokenized rows.
 
@@ -295,9 +169,9 @@ def _invert_arrow(tokenized: DataFrame) -> DataFrame:
     The kernel touches no Python string objects: token bytes stay in
     Arrow buffers end to end (dictionary_encode + take are Arrow C++),
     the per-batch fold is numpy over int index arrays, and the
-    positions column is a zero-copy ListArray. Same group order and
-    1-based positions as the pandas kernel (equivalence pinned by
-    tests/test_analysis.py)."""
+    positions column is a zero-copy ListArray. Rows are pinned against
+    a Python reference inversion (1-based positions over surviving
+    tokens) by tests/test_analysis.py."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -359,39 +233,17 @@ def _invert_arrow(tokenized: DataFrame) -> DataFrame:
     return tokenized.mapInArrow(go, schema=POSTINGS_SCHEMA)
 
 
-def _invert_jvm(stacked: DataFrame, cfg: BuildConfig | None = None) -> DataFrame:
-    """Pure-JVM inversion: tokenize (regexp_extract_all), dl computed
-    map-side BEFORE the explode (rides the token rows — no second
-    shuffle or doc join), posexplode for 1-based positions, groupBy
-    (context, doc_id, term) with map-side partial aggregation. Whole-
-    stage codegen end to end; shuffles Tungsten token rows instead of
-    Python objects."""
-    toks = (
-        stacked.withColumn("toks", _tokenize_expr(cfg))
-        .withColumn("dl", F.size("toks").cast("int"))
-        .filter(F.col("dl") > 0)
-        .select(
-            "doc_id", "context", "dl",
-            F.posexplode("toks").alias("pos0", "term"),
-        )
-    )
-    return toks.groupBy("context", "doc_id", "term", "dl").agg(
-        F.count("*").cast("int").alias("tf"),
-        F.array_sort(F.collect_list(F.col("pos0") + F.lit(1))).alias("positions"),
-    ).select("doc_id", "context", "term", "tf", "positions", "dl")
-
-
 def postings_from_contexts(
     docs: DataFrame, context_cols: dict[str, Column], cfg: BuildConfig
 ) -> DataFrame:
     """docs must carry ``doc_id``; context_cols maps context name ->
     string column with that context's raw text (or raw html binary when
     cfg.extract_html is set — extraction runs in a vectorized Arrow UDF
-    before the JVM tokenizer, or fused inside the python invert
-    kernel)."""
+    before the JVM tokenizer). Tokens come from one JVM expression per
+    context (_tokenize_expr) and are inverted by the Arrow kernel
+    _invert_arrow."""
     from hunt_spark.functions.analysis import extract_text_udf, normalize_context_col
 
-    strategy = cfg.invert_strategy
     cast_to = "binary" if cfg.extract_html else "string"
 
     typed_names = [
@@ -440,53 +292,31 @@ def postings_from_contexts(
     stacked = per_cx[0]
     for d in per_cx[1:]:
         stacked = stacked.unionByName(d)
-    if cfg.extract_html and cfg.context_selectors:
-        # per-context selector feeds (html-hunter "-c cx:xpath"): one
-        # Arrow pass routing each row's context to its selector; the
-        # stacked frame then carries extracted text for every strategy.
-        # Typed-context rows were extracted+normalized in prepared() —
-        # re-extracting their key stream would corrupt it.
-        ext = sel_udf(F.col("context"), F.col("text"))
+    if cfg.extract_html:
+        # one vectorized Arrow pass extracts every row's text before the
+        # JVM tokenizer: per-context selector feeds (html-hunter
+        # "-c cx:xpath") route each row's context to its selector, other
+        # builds take the whole-document extraction (the byte-identity
+        # contract with _extract_one). Typed-context rows were
+        # extracted+normalized in prepared() — re-extracting their key
+        # stream would corrupt it.
+        ext = (
+            sel_udf(F.col("context"), F.col("text"))
+            if sel_udf is not None
+            else extract_text_udf("text")
+        )
         if typed_names:
             ext = F.when(
                 F.col("context").isin(typed_names), F.col("text").cast("string")
             ).otherwise(ext)
         stacked = stacked.withColumn("text", ext)
-        extract_in_kernel = False
-    else:
-        extract_in_kernel = cfg.extract_html
-    if strategy == "python":
-        p = stacked.mapInPandas(
-            _make_invert(
-                extract_in_kernel,
-                scan_pats=_text_scan_overrides(cfg) or None,
-                chains=_text_chains(cfg) or None,
-                skip_extract_cxs=frozenset(typed_names) or None,
-            ),
-            schema=POSTINGS_SCHEMA,
-        )
-    else:
-        if extract_in_kernel:
-            # byte-identity contract: extraction stays the vectorized
-            # python UDF; tokenization and inversion move off python
-            # (typed rows are already extracted+normalized)
-            ext = extract_text_udf("text")
-            if typed_names:
-                ext = F.when(
-                    F.col("context").isin(typed_names),
-                    F.col("text").cast("string"),
-                ).otherwise(ext)
-            stacked = stacked.withColumn("text", ext)
-        if strategy == "arrow":
-            tokenized = (
-                stacked.withColumn("toks", _tokenize_expr(cfg))
-                .withColumn("dl", F.size("toks").cast("int"))
-                .filter(F.col("dl") > 0)
-                .select("doc_id", "context", "toks", "dl")
-            )
-            p = _invert_arrow(tokenized)
-        else:
-            p = _invert_jvm(stacked, cfg)
+    tokenized = (
+        stacked.withColumn("toks", _tokenize_expr(cfg))
+        .withColumn("dl", F.size("toks").cast("int"))
+        .filter(F.col("dl") > 0)
+        .select("doc_id", "context", "toks", "dl")
+    )
+    p = _invert_arrow(tokenized)
     small = sorted(
         cx for cx, t in cfg.context_types.items() if t == "text-small"
     )
@@ -654,9 +484,7 @@ def build_blocks(
     # term_lc hash to the same bucket), which is all the pack kernel's
     # contiguity contract needs. ~4 keys per partition smooths the
     # balls-in-bins imbalance of hashing few keys into as many tasks.
-    n_pack_parts = cfg.pack_partitions or max(
-        cfg.n_shards, 2 * spark.sparkContext.defaultParallelism
-    )
+    n_pack_parts = max(cfg.n_shards, 2 * spark.sparkContext.defaultParallelism)
     n_cx = max(1, len(n_docs_by_cx))
     sub_buckets = max(1, (4 * n_pack_parts) // (n_cx * cfg.n_shards))
     pack_bucket = F.pmod(F.xxhash64("term_lc"), F.lit(sub_buckets))
@@ -816,82 +644,12 @@ def build_blocks(
 
         return go(batches)
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-
-        def emit(b: pd.DataFrame) -> pd.DataFrame:
-            out = {k: [] for k in (
-                "context", "shard", "term_lc", "block_id", "n_postings",
-                "max_tfn", "doc_ids_vb", "variants", "tfs", "dls", "df",
-            )}
-            cx_a = b["context"].to_numpy()
-            lc_a = b["term_lc"].to_numpy()
-            bid_a = b["block_id"].to_numpy()
-            # contiguous group boundaries over the sorted frame
-            brk = np.flatnonzero(
-                (cx_a[1:] != cx_a[:-1])
-                | (lc_a[1:] != lc_a[:-1])
-                | (bid_a[1:] != bid_a[:-1])
-            )
-            starts = np.concatenate(([0], brk + 1))
-            ends = np.concatenate((brk + 1, [len(b)]))
-            ids_a = b["doc_id"].to_numpy()
-            var_a = b["variant"].to_numpy()
-            tf_a = b["tf"].to_numpy().astype(np.int32)
-            dl_a = b["dl"].to_numpy().astype(np.int32)
-            df_a = b["df"].to_numpy().astype(np.int64)
-            sh_a = b["shard"].to_numpy()
-            for i0, i1 in zip(starts, ends):
-                cx = cx_a[i0]
-                a_dl = avg_dl_by_cx[cx]
-                tf = tf_a[i0:i1].astype(np.float64)
-                dl = dl_a[i0:i1].astype(np.float64)
-                # identical expression shape to tf_norm_col; idf is a
-                # per-term scalar multiplied on after the stats re-join
-                tfn = (tf * (BM25_K1 + 1.0)) / (
-                    tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / a_dl)
-                )
-                out["context"].append(cx)
-                out["shard"].append(sh_a[i0])
-                out["term_lc"].append(lc_a[i0])
-                out["block_id"].append(bid_a[i0])
-                out["n_postings"].append(i1 - i0)
-                out["max_tfn"].append(float(tfn.max()))
-                out["doc_ids_vb"].append(delta_varbyte_encode(ids_a[i0:i1]))
-                out["variants"].append(var_a[i0:i1])
-                out["tfs"].append(tf_a[i0:i1])
-                out["dls"].append(dl_a[i0:i1])
-                out["df"].append(df_a[i0])
-            return pd.DataFrame(out)
-
-        for b in batches:
-            if carry is not None:
-                b = pd.concat([carry, b], ignore_index=True)
-                carry = None
-            if len(b) == 0:
-                continue
-            # hold back the (possibly incomplete) trailing group
-            last = (
-                (b["context"] == b["context"].iloc[-1])
-                & (b["term_lc"] == b["term_lc"].iloc[-1])
-                & (b["block_id"] == b["block_id"].iloc[-1])
-            )
-            cut = int(len(b) - last[::-1].cummin().sum())
-            carry = b.iloc[cut:].reset_index(drop=True)
-            if cut:
-                yield emit(b.iloc[:cut])
-        if carry is not None and len(carry):
-            yield emit(carry)
-
     packed_schema = (
         "context string, shard int, term_lc string, block_id int, "
         "n_postings long, max_tfn double, doc_ids_vb binary, "
         "variants array<string>, tfs array<int>, dls array<int>, df long"
     )
-    if cfg.pack_strategy == "arrow":
-        packed = pre.mapInArrow(pack_arrow, schema=packed_schema)
-    else:
-        packed = pre.mapInPandas(pack, schema=packed_schema)
+    packed = pre.mapInArrow(pack_arrow, schema=packed_schema)
     # finish the block-max bound JVM-side on the block-granular rows:
     # max_bm25 = idf * max_tfn. df rode the pack shuffle and n_docs is
     # a per-context literal from the already-collected context stats —

@@ -1,15 +1,23 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``cosine_topk``: exact brute-force top-k neighbors for a probe set —
-  broadcast the probes, JVM-side zip_with/aggregate dot products, no
-  Python in the hot path. The baseline and the verifier for the ANN
-  path.
+  an Arrow-batched kernel against the broadcast probe matrix. The
+  baseline and the verifier for the ANN paths.
 - ``lsh_ann_topk``: random-hyperplane LSH bucketing — probes only join
-  candidates sharing a hyperplane signature band, the scale path when
-  the corpus side is 10^9+ vectors.
+  candidates sharing a hyperplane signature (or a 1-bit flip of it),
+  the scale path when the corpus side is 10^9+ vectors.
+- ``ivf_ann_topk``: IVF-Flat — coarse cells, multi-probe, exact rerank.
+- ``embedding_near_dup_pairs``: banded sign-random-projection LSH
+  candidates verified by exact cosine.
+
+LSH signatures and IVF cells come from ONE Arrow kernel
+(``_projection_col``): each vector's dot products against a broadcast
+plane or centroid matrix, reduced to sign bits or ranked cells.
 
 All math in float64 with a fixed fold order (array index order) for
-cross-engine reproducibility.
+cross-engine reproducibility: every dot product is folded sequentially
+over dimensions (``_seq_dots``), the association of the Catalyst
+``aggregate`` in ``with_cosine`` and of the DuckDB ``list_sum`` oracles.
 """
 
 from __future__ import annotations
@@ -19,12 +27,17 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Above this many scalar literals (n_cells x dim / n_planes x dim) the
-# expression-tree path is off the table: Catalyst would have to compile
-# millions of literal nodes (4k cells x 768 dims ~ 3M), so cell/
-# signature assignment switches to an Arrow-batched pandas UDF over a
-# broadcast numpy matrix — one BLAS matmul per batch.
-EXPR_LITERAL_LIMIT = 16_384
+def _seq_dots(m: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """(n, dim) rows x (k, dim) rows -> (n, k) float64 dot products,
+    folded ((0 + x1*w1) + x2*w2) + ... one dimension at a time
+    (vectorized over all n*k pairs). That is the IEEE association of
+    the Catalyst ``aggregate`` and of DuckDB ``list_sum``, so every dot
+    is bit-identical to them; a BLAS matmul reassociates the sum and
+    can flip a sign bit or an argmax on near-ties."""
+    acc = np.zeros((m.shape[0], w.shape[0]), dtype=np.float64)
+    for d in range(m.shape[1]):
+        acc += np.multiply.outer(m[:, d], w[:, d])
+    return acc
 
 
 def _dot(a, b):
@@ -84,12 +97,6 @@ def cosine_topk(
     )
     spark = embeddings.sparkSession
 
-    def _seq_dot(m: np.ndarray, v: np.ndarray) -> np.ndarray:
-        acc = np.zeros(m.shape[0], dtype=np.float64)
-        for d in range(m.shape[1]):
-            acc = acc + m[:, d] * v[d]
-        return acc
-
     def _seq_norm(m: np.ndarray) -> np.ndarray:
         acc = np.zeros(m.shape[0], dtype=np.float64)
         for d in range(m.shape[1]):
@@ -135,7 +142,7 @@ def cosine_topk(
                 na = p_norm[pid]
                 if pv is not None and na is not None and ok.any():
                     den = na * nb[ok]
-                    dot = _seq_dot(m, pv)
+                    dot = _seq_dots(m, pv[None, :])[:, 0]
                     with np.errstate(invalid="ignore", divide="ignore"):
                         c = np.where(den != 0.0, dot / den, 0.0)
                     cos[ok] = c
@@ -172,27 +179,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.normal(size=(n_planes, dim))
 
 
-def lsh_signature_col(vec, planes: np.ndarray):
-    """Sign bits of hyperplane projections, packed to a long — pure
-    column expressions over literal plane arrays."""
-    bits = []
-    for i, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(x)) for x in plane]),
-                lambda x, p: x.cast("double") * p,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig.cast("long")
-
-
 def ivf_centroids(dim: int, n_cells: int, seed: int = 7) -> np.ndarray:
     """Deterministic unit-norm cell centroids (Philox stream). A real
     deployment would train them with k-means over a corpus sample; the
@@ -204,111 +190,69 @@ def ivf_centroids(dim: int, n_cells: int, seed: int = 7) -> np.ndarray:
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
-def _cell_dots(vec, centroids: np.ndarray) -> list:
-    return [
-        F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(x)) for x in c]),
-                lambda x, p: x.cast("double") * p,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ]
-
-
-def ivf_cell_col(vec, centroids: np.ndarray):
-    """1-based nearest-centroid id: argmax of the centroid dot products
-    (centroids are unit vectors, so max dot == max cosine)."""
-    dots = F.array(*_cell_dots(vec, centroids))
-    return F.array_position(dots, F.array_max(dots)).cast("int")
-
-
-def _bcast_matrix(df: DataFrame, m: np.ndarray):
-    """Ship the centroid/plane matrix to executors ONCE via a Spark
-    broadcast (capturing it raw would re-serialize it into every task)."""
-    return df.sparkSession.sparkContext.broadcast(
-        np.ascontiguousarray(m, dtype=np.float64)
+def _projection_col(
+    df: DataFrame, vec_col: str, matrix: np.ndarray, return_type: str, reduce
+):
+    """The embedding kernel behind LSH signatures and IVF cells, applied
+    to ``vec_col``: one Arrow-batched pandas UDF that stacks a batch of
+    vectors, takes their sequentially folded dot products
+    (``_seq_dots``) against ``matrix`` (k, dim) — shipped to executors
+    ONCE as a Spark broadcast — and maps the (n, k) dots through
+    ``reduce`` to one value per row. A null vector yields a null result; a vector whose
+    length is not dim raises."""
+    bc = df.sparkSession.sparkContext.broadcast(
+        np.ascontiguousarray(matrix, dtype=np.float64)
     )
 
-
-def ivf_cell_udf(embeddings: DataFrame, vec_col: str, centroids: np.ndarray):
-    """Scale path for cell assignment: one float64 BLAS matmul per Arrow
-    batch against the broadcast centroid matrix; argmax tie-break =
-    first (lowest) cell index, identical to the expression path's
-    array_position-of-max."""
-    bc = _bcast_matrix(embeddings, centroids)
-
-    @F.pandas_udf("int")
-    def cell_of(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        return pd.Series((m @ bc.value.T).argmax(axis=1) + 1, dtype="int32")
-
-    return cell_of(F.col(vec_col))
-
-
-def ivf_probe_cells_udf(
-    embeddings: DataFrame, vec_col: str, centroids: np.ndarray, n_probe: int
-):
-    """Top-``n_probe`` cells per probe on the scale path; stable argsort
-    on -dot keeps the (dot DESC, cell ASC) order of the expression path."""
-    bc = _bcast_matrix(embeddings, centroids)
-
-    @F.pandas_udf("array<int>")
-    def cells_of(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        order = np.argsort(-(m @ bc.value.T), axis=1, kind="stable")
-        return pd.Series(list((order[:, :n_probe] + 1).astype(np.int32)))
-
-    return cells_of(F.col(vec_col))
-
-
-def lsh_signature_udf(embeddings: DataFrame, vec_col: str, planes: np.ndarray):
-    """Scale path for LSH signatures: sign bits of one matmul packed to
-    a long (bit i set iff projection on plane i >= 0 — the same
-    convention as lsh_signature_col)."""
-    bc = _bcast_matrix(embeddings, planes)
-    weights = (1 << np.arange(planes.shape[0], dtype=np.int64))
-
-    @F.pandas_udf("long")
-    def sig_of(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        bits = (m @ bc.value.T) >= 0
-        return pd.Series(bits @ weights, dtype="int64")
-
-    return sig_of(F.col(vec_col))
-
-
-def banded_signature_udf(
-    embeddings: DataFrame, vec_col: str, planes: np.ndarray, n_bands: int
-):
-    """All band signatures in one Arrow UDF: a single (batch x dim) @
-    (dim x n_planes) matmul, bits reshaped (n, n_bands, per) and packed
-    per band — value-identical to banded_signature_exprs and to calling
-    lsh_signature_udf per band slice, at 1/n_bands the Python-worker
-    cost. Null vectors yield a null signature array (the equality join
-    drops them, matching the expr path's null semantics)."""
-    bc = _bcast_matrix(embeddings, planes)
-    n_planes = planes.shape[0]
-    per = n_planes // n_bands
-    weights = 1 << np.arange(per, dtype=np.int64)
-
-    @F.pandas_udf("array<long>")
-    def sigs_of(v: pd.Series) -> pd.Series:
-        out = [None] * len(v)
+    @F.pandas_udf(return_type)
+    def kernel(v: pd.Series) -> pd.Series:
+        w = bc.value
         vals = v.to_numpy()
-        idx = [i for i, x in enumerate(vals) if x is not None]
-        if idx:
-            m = np.stack([vals[i] for i in idx]).astype(np.float64)
-            bits = (m @ bc.value.T) >= 0
-            sigs = bits.reshape(len(idx), n_bands, per) @ weights
-            for j, i in enumerate(idx):
-                out[i] = sigs[j].tolist()
+        rows = np.flatnonzero([x is not None for x in vals])
+        out = np.full(len(vals), None, dtype=object)
+        if len(rows):
+            lens = {len(vals[i]) for i in rows}
+            if lens != {w.shape[1]}:
+                raise ValueError(
+                    f"embedding lengths {sorted(lens)} != dim {w.shape[1]}"
+                )
+            m = np.stack([vals[i] for i in rows]).astype(np.float64)
+            for i, r in zip(rows, reduce(_seq_dots(m, w))):
+                out[i] = r
         return pd.Series(out)
 
-    return sigs_of(F.col(vec_col))
+    return kernel(F.col(vec_col))
+
+
+def band_signatures(
+    embeddings: DataFrame, vec_col: str, planes: np.ndarray, n_bands: int = 1
+):
+    """array<long> of ``n_bands`` LSH signatures: ``planes`` split into
+    contiguous bands, bit i of band j set iff the projection on plane
+    j*per + i is >= 0 (per = n_planes / n_bands)."""
+    per = planes.shape[0] // n_bands
+    weights = 1 << np.arange(per, dtype=np.int64)
+
+    def signs(dots: np.ndarray) -> np.ndarray:
+        return (dots >= 0).reshape(len(dots), n_bands, per) @ weights
+
+    return _projection_col(embeddings, vec_col, planes, "array<long>", signs)
+
+
+def nearest_cells(
+    embeddings: DataFrame, vec_col: str, centroids: np.ndarray, n: int
+):
+    """array<int> of the ``n`` 1-based cells with the largest centroid
+    dot products, ordered (dot DESC, cell ASC) — element 0 is the first
+    argmax (centroids are unit vectors, so max dot == max cosine)."""
+
+    def ranked(dots: np.ndarray) -> np.ndarray:
+        order = np.argsort(-dots, axis=1, kind="stable")
+        return (order[:, :n] + 1).astype(np.int32)
+
+    return _projection_col(
+        embeddings, vec_col, centroids, "array<int>", ranked
+    )
 
 
 def ivf_ann_topk(
@@ -320,37 +264,18 @@ def ivf_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    strategy: str = "auto",
 ) -> DataFrame:
     """IVF approximate top-k: the corpus is inverted into coarse cells
     (nearest deterministic centroid); each probe visits its ``n_probe``
     closest cells and reranks those cells' vectors by exact cosine —
     the classic IVF-Flat plan. At 10^9+ vectors the cell column is the
     partition key, so a query touches n_probe/n_cells of the data.
-    Same output schema as cosine_topk/lsh_ann_topk.
-
-    ``strategy``: "expr" (literal centroid expressions, whole-stage
-    codegen — small configs), "udf" (broadcast matrix + Arrow-batched
-    matmul — production n_cells x dim), or "auto" (by literal count)."""
+    Same output schema as cosine_topk/lsh_ann_topk. Null vectors get no
+    cell, so they are never candidates and a null probe returns no
+    rows."""
     cents = ivf_centroids(dim, n_cells)
-    if strategy == "auto":
-        strategy = "expr" if cents.size <= EXPR_LITERAL_LIMIT else "udf"
-    if strategy == "udf":
-        cell = ivf_cell_udf(embeddings, vec_col, cents)
-        probe_cells = ivf_probe_cells_udf(embeddings, vec_col, cents, n_probe)
-    else:
-        cell = ivf_cell_col(F.col(vec_col), cents)
-        # probe side: top-n_probe cells by (dot DESC, cell ASC)
-        dots = _cell_dots(F.col(vec_col), cents)
-        cells_ranked = F.array_sort(
-            F.array(*[
-                F.struct((-d).alias("nd"), F.lit(i + 1).alias("i"))
-                for i, d in enumerate(dots)
-            ])
-        )
-        probe_cells = F.transform(
-            F.slice(cells_ranked, 1, n_probe), lambda s: s["i"]
-        )
+    cell = nearest_cells(embeddings, vec_col, cents, 1)[0]
+    probe_cells = nearest_cells(embeddings, vec_col, cents, n_probe)
     tagged = embeddings.withColumn("cell", cell)
     probes = embeddings.filter(F.col(id_col).isin(probe_ids)).select(
         F.col(id_col).alias("probe_id"),
@@ -389,12 +314,12 @@ def lsh_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Approximate top-k: candidates limited to vectors sharing the
     probe's LSH signature (plus 1-bit-flip neighbor buckets for
     recall), exact cosine on candidates. Same output schema as
-    cosine_topk. ``strategy`` as in ivf_ann_topk."""
+    cosine_topk. Null vectors get no signature, so they are never
+    candidates and a null probe returns no rows."""
     if dim is None:
         # sniff from a NON-NULL row: .first() landing on a null vector
         # must not degenerate the whole table to an empty result
@@ -408,12 +333,7 @@ def lsh_ann_topk(
             )
         dim = len(row[0])
     planes = _hyperplanes(dim, n_planes)
-    if strategy == "auto":
-        strategy = "expr" if planes.size <= EXPR_LITERAL_LIMIT else "udf"
-    if strategy == "udf":
-        sig = lsh_signature_udf(embeddings, vec_col, planes)
-    else:
-        sig = lsh_signature_col(F.col(vec_col), planes)
+    sig = band_signatures(embeddings, vec_col, planes)[0]
     tagged = embeddings.withColumn("sig", sig)
     probes = tagged.filter(F.col(id_col).isin(probe_ids)).select(
         F.col(id_col).alias("probe_id"),
@@ -448,17 +368,6 @@ def lsh_ann_topk(
     )
 
 
-def banded_signature_exprs(vec, planes: np.ndarray, n_bands: int) -> list:
-    """Split ``planes`` into ``n_bands`` contiguous slices and pack each
-    slice's sign bits into its own long (bit i = plane i WITHIN the
-    band, the lsh_signature_col convention)."""
-    per = planes.shape[0] // n_bands
-    return [
-        lsh_signature_col(vec, planes[j * per:(j + 1) * per])
-        for j in range(n_bands)
-    ]
-
-
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.45,
@@ -467,7 +376,6 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs over a corpus embedding
     table — the vector-space member of the dedup family (exact hash /
@@ -490,9 +398,8 @@ def embedding_near_dup_pairs(
     near-dup thresholds (>= 0.9) you widen bands to 16-32 bits so a
     bucket holds only true near-neighbors; the defaults here are sized
     for the synthetic gate corpus, whose most-similar pairs sit near
-    cosine 0.5. Signatures come from column expressions below
-    EXPR_LITERAL_LIMIT literals, else from the Arrow-batched matmul UDF
-    (both use the >= 0 sign convention, so the plans are equivalent).
+    cosine 0.5. All band signatures come from one kernel evaluation per
+    row (band_signatures); a null vector has none, so it never joins.
 
     Returns (vec_id_a, vec_id_b, cosine_x1e4) with vec_id_a < vec_id_b.
     """
@@ -510,18 +417,7 @@ def embedding_near_dup_pairs(
             )
         dim = len(row[0])
     planes = _hyperplanes(dim, n_planes)
-    if strategy == "auto":
-        strategy = "expr" if planes.size <= EXPR_LITERAL_LIMIT else "udf"
-    if strategy == "udf":
-        # ONE Arrow UDF evaluation and ONE matmul per batch, all bands
-        # sliced from the same bit matrix — n_bands separate per-band
-        # UDFs would pay the Python-worker + BLAS cost n_bands times on
-        # exactly the path that only runs at scale
-        bands_col = banded_signature_udf(embeddings, vec_col, planes, n_bands)
-    else:
-        bands_col = F.array(
-            *banded_signature_exprs(F.col(vec_col), planes, n_bands)
-        )
+    bands_col = band_signatures(embeddings, vec_col, planes, n_bands)
     tagged = embeddings.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),

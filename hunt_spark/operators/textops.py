@@ -408,33 +408,6 @@ def shingles_col(tokens: Column, k: int = 3) -> Column:
     )
 
 
-def _shingle_arrays(docs: DataFrame, text_col: str, k: int) -> DataFrame:
-    """(doc_id, sh array<string>) — the ONE tokenize+shingle pass both
-    candidate generation and exact verification derive from. Persisted
-    and materialized by the callers: the corpus-wide tokenize+shingle
-    expression is the dominant cost of the dedup operators, and without
-    an eager persist each downstream branch of a single job would
-    recompute it (a lazy persist does not help branches racing past the
-    empty cache). At true 100 TB scale swap the persist for DISK_ONLY
-    or recompute — the call sites are the only thing to change.
-
-    Cache LIFETIME is caller-owned: the returned frame is embedded in
-    the operators' lazy result plans, so this module cannot unpersist
-    it without invalidating them. Long-running applications calling the
-    dedup operators over many corpora should `spark.catalog.clearCache()`
-    (or track and unpersist) between corpora; the serving engine never
-    runs these operators, so the server path is unaffected."""
-    sh = (
-        _spread(docs).select(
-            "doc_id", shingles_col(tokenize_col(text_col), k).alias("sh")
-        )
-        .filter(F.size("sh") > 0)
-        .persist()
-    )
-    sh.count()
-    return sh
-
-
 def _hashed_shingles(docs: DataFrame, text_col: str, k: int) -> DataFrame:
     """(doc_id, n_sh, hs array<long>) — the tokenize+shingle pass with
     each distinct k-token shingle mapped to its xxhash64, the 64-bit
@@ -451,8 +424,17 @@ def _hashed_shingles(docs: DataFrame, text_col: str, k: int) -> DataFrame:
     size; output parity is pinned by the driver gates, whose oracle
     computes the same pairs from the raw strings exhaustively).
 
-    Persisted + materialized exactly like _shingle_arrays, with the
-    same caller-owned cache lifetime contract (see that docstring)."""
+    Persisted and materialized here: the corpus-wide tokenize+shingle
+    expression is the dominant cost of the dedup operators, and without
+    an eager persist each downstream branch of a single job would
+    recompute it (a lazy persist does not help branches racing past the
+    empty cache). At true 100 TB scale swap the persist for DISK_ONLY
+    or recompute. Cache LIFETIME is caller-owned: the returned frame is
+    embedded in the operators' lazy result plans, so this module cannot
+    unpersist it without invalidating them. Long-running applications
+    calling the dedup operators over many corpora should
+    `spark.catalog.clearCache()` (or track and unpersist) between
+    corpora; the serving engine never runs these operators."""
     hs = F.array_distinct(
         F.transform(
             shingles_col(tokenize_col(text_col), k), lambda s: F.xxhash64(s)
@@ -572,54 +554,16 @@ def ngram_jaccard_pairs(
     return _verify_jaccard_pairs(cand, hs_arrays, threshold)
 
 
-def minhash_signatures(
-    docs: DataFrame, n_hashes: int = 8, k: int = 3, text_col: str = "text",
-    sh_arrays: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash signatures: per seed i, min over shingles of
-    xxhash64(seed_i || shingle) — all JVM-side array expressions.
-    Pass ``sh_arrays`` to reuse an existing (doc_id, sh) shingle frame."""
-    sh = (
-        sh_arrays
-        if sh_arrays is not None
-        else _spread(docs).select(
-            "doc_id", shingles_col(tokenize_col(text_col), k).alias("sh")
-        ).filter(F.size("sh") > 0)
-    )
-    # ONE aggregate pass over the shingle array computing all seeds'
-    # minima together: n separate array_min(transform(sh,...)) columns
-    # get the shingle expression INLINED n times by CollapseProject
-    # (higher-order funcs defeat subexpression elimination) — measured
-    # 5.6s -> ~1s for 5k docs at n_hashes=8
-    init = F.array(*[F.lit(2**63 - 1).cast("long")] * n_hashes)
-    sig = F.aggregate(
-        "sh",
-        init,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.xxhash64(F.concat(F.lit(f"mh{i}:"), s))
-                    for i in range(n_hashes)
-                ]
-            ),
-            lambda a, h: F.least(a, h),
-        ),
-    )
-    return sh.select("doc_id", sig.alias("sig"))
-
-
 def _minhash_sigs_hashed(hs_arrays: DataFrame, n_hashes: int) -> DataFrame:
     """MinHash signatures over HASHED shingles: per seed i, min over
-    hs of xxhash64(i, h) — the same single-aggregate-pass banded-LSH
-    structure as minhash_signatures with all per-element work on longs
-    (the one string hash per shingle was paid in _hashed_shingles, so
-    the n_hashes-per-element re-hash is O(1) instead of O(shingle
-    bytes) — guide §2.3/§1.2 per-task work). The hash family differs
-    from the string path only in which uniform 64-bit values it draws;
-    candidate recall keeps the banded 1-(1-j^rows)^bands form and the
-    final pair set is fixed by exact verification (driver-gate-pinned
-    to the exhaustive oracle)."""
+    hs of xxhash64(i, h), all seeds' minima in ONE aggregate pass over
+    the array, with all per-element work on longs (the one string hash
+    per shingle was paid in _hashed_shingles, so the n_hashes-per-
+    element re-hash is O(1) instead of O(shingle bytes) — guide
+    §2.3/§1.2 per-task work). Candidate recall keeps the banded
+    1-(1-j^rows)^bands form and the final pair set is fixed by exact
+    verification (the dedup_minhash_lsh gate pins it to the exhaustive
+    oracle)."""
     init = F.array(*[F.lit(2**63 - 1).cast("long")] * n_hashes)
     sig = F.aggregate(
         "hs",

@@ -32,6 +32,7 @@ index XMVar while Warp threads serve).
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -39,6 +40,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import functions as F
 
 from hunt_spark.engine import HuntEngine
+
+_log = logging.getLogger("hunt_spark.server")
 
 
 class HuntApiError(Exception):
@@ -97,8 +100,11 @@ class HuntServer:
         class Handler(BaseHTTPRequestHandler):
             # one request at a time per path is fine; Spark driver
             # serializes job submission anyway
-            def log_message(self, *a):  # quiet test output
-                pass
+            def log_message(self, fmt, *args):
+                # request lines and http.server errors: DEBUG, so tests
+                # and benchmarks stay quiet unless the logger is raised
+                if _log.isEnabledFor(logging.DEBUG):
+                    _log.debug("%s %s", self.address_string(), fmt % args)
 
             def _reply(self, status: int, payload) -> None:
                 body = json.dumps(payload).encode()
@@ -114,6 +120,8 @@ class HuntServer:
                 except HuntApiError as e:
                     self._reply(e.code, {"code": e.code, "msg": e.msg})
                 except Exception as e:  # noqa: BLE001 — wire boundary
+                    # the client gets the message; the log keeps the trace
+                    _log.exception("500 on %s %s", self.command, self.path)
                     self._reply(500, {"code": 500, "msg": str(e)})
 
             def _body(self) -> dict:

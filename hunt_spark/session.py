@@ -13,6 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """A quarter of physical RAM, clamped to 1-32 GiB. The driver heap
+    may grow to its limit before collecting, so a limit above what the
+    host has lets the JVM run into the kernel's OOM killer (observed: a
+    32g-heap test session killed at 15.2 GB RSS on a 16 GB host)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32 * 1024, max(1024, phys // 4 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "hunt_spark",
     master: str | None = None,
@@ -44,9 +53,12 @@ def get_spark(
         # local-mode driver == the one executor: all task threads share
         # this heap. 8g starved 32 concurrent tasks at the bench's
         # 50k-doc scale (driver-observed "Java heap space" in r5's
-        # sf1.0 rebench); a real 32-core executor node ships with far
-        # more. Env-overridable for smaller hosts.
-        .config("spark.driver.memory", os.environ.get("HUNT_SPARK_DRIVER_MEM", "32g"))
+        # sf1.0 rebench), so large hosts keep up to 32g; small hosts
+        # get a quarter of their RAM. HUNT_SPARK_DRIVER_MEM overrides.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("HUNT_SPARK_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

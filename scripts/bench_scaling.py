@@ -40,7 +40,6 @@ def make_zip(dest: str) -> str:
 
 def run_job(
     zpath: str, corpus: str, cores: int, queries: bool, from_html: bool = False,
-    invert_strategy: str = "arrow",
 ) -> dict:
     # Cluster-resource emulation on one box (the sandbox adaptation of
     # N vs 4N executors — each fix is something a real cluster gives
@@ -86,7 +85,6 @@ def run_job(
         "--input", corpus,
         "--out", out_dir,
         "--cores", str(cores),
-        "--invert-strategy", invert_strategy,
     ]
 
     def submit(cmd: list[str]) -> dict:
@@ -189,8 +187,6 @@ def main() -> None:
     ap.add_argument("--from-html", action="store_true")
     ap.add_argument("--reps", type=int, default=3,
                     help="interleaved (hw, N, 4N) pairs; headline = median")
-    ap.add_argument("--invert-strategy", default="arrow",
-                    choices=["arrow", "python", "jvm"])
     ap.add_argument("--out-md", default=os.path.join(REPO, "BENCH", "BASELINE.md"))
     ap.add_argument("--min-bw", type=float, default=0.0,
                     help="clean-window gate: only START a pair when the "
@@ -335,11 +331,9 @@ def main() -> None:
         clean = bw_ok(bw["efficiency"]) and alu_ok(hw["efficiency"])
         last = rep == args.reps - 1
         m_n = run_job(zpath, args.corpus, n, queries=last,
-                      from_html=args.from_html,
-                      invert_strategy=args.invert_strategy)
+                      from_html=args.from_html)
         m_4n = run_job(zpath, args.corpus, n4, queries=last,
-                       from_html=args.from_html,
-                       invert_strategy=args.invert_strategy)
+                       from_html=args.from_html)
         eff = (m_n["build_sec"] / m_4n["build_sec"]) / 4
         core_eff = (
             round((m_n["core_build_sec"] / m_4n["core_build_sec"]) / 4, 3)

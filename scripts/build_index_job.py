@@ -44,12 +44,6 @@ def main() -> None:
         "pre-extracted text column",
     )
     ap.add_argument(
-        "--invert-strategy",
-        default="arrow",
-        choices=["arrow", "python", "jvm"],
-        help="postings inversion path (see BuildConfig.invert_strategy)",
-    )
-    ap.add_argument(
         "--queries-only",
         action="store_true",
         help="skip the build; open the existing catalog at --out and "
@@ -98,13 +92,12 @@ def main() -> None:
             salt_buckets=args.salt_buckets,
             block_size=args.block_size,
             extract_html=args.from_html,
-            invert_strategy=args.invert_strategy,
         ),
     )
     out = {"n_docs": n_docs, "cores": args.cores}
     if not args.queries_only:
-        # --from-html: extraction runs fused inside the tokenize kernel
-        # (one Arrow pass) on the raw html binary
+        # --from-html: a vectorized Arrow UDF extracts the text from the
+        # raw html binary before the JVM tokenizer
         cx = {"text": F.col("html") if args.from_html else F.col("text")}
         t0 = time.time()
         entries = eng.build(docs, cx, build_id="bench", resume=False)

@@ -61,3 +61,32 @@ def oracle(spark, corpus):
         title[r["doc_id"]] = _TITLE_RE.search(h).group(1)
         body[r["doc_id"]] = _BODY_RE.search(h).group(1)
     return OracleIndex(docs, {"title": title, "body": body})
+
+
+def reference_postings(texts, tokenize=None):
+    """Postings rows (doc_id, term, tf, positions, dl) inverted in
+    Python from (doc_id, text) pairs — the contract of the build's
+    Arrow inversion: ``tokenize`` (default tokenize_py) gives a text's
+    surviving tokens, positions are 1-based over them (Hunt
+    Analyze.hs:74-84), dl is their count, a doc with none has no rows.
+    OracleIndex.postings holds the same inversion, keyed by term."""
+    from hunt_spark.functions.analysis import tokenize_py
+
+    tokenize = tokenize or tokenize_py
+    out = []
+    for doc_id, text in texts:
+        toks = tokenize(text)
+        pos: dict[str, list[int]] = {}
+        for i, t in enumerate(toks, start=1):
+            pos.setdefault(t, []).append(i)
+        out += [(doc_id, t, len(p), tuple(p), len(toks)) for t, p in pos.items()]
+    return sorted(out)
+
+
+def postings_rows(postings):
+    """The (doc_id, term, tf, positions, dl) rows of a postings frame,
+    sorted — comparable with reference_postings."""
+    return sorted(
+        (r["doc_id"], r["term"], r["tf"], tuple(r["positions"]), r["dl"])
+        for r in postings.collect()
+    )

@@ -20,6 +20,8 @@ from hunt_spark.functions.varbyte import (
 )
 from hunt_spark.sources.corpus import corpus_df, corpus_pandas
 
+from conftest import postings_rows, reference_postings
+
 
 def test_tokenize_parity_jvm_python(spark):
     samples = [
@@ -82,9 +84,9 @@ def test_varbyte_roundtrip_signed_first(values):
 
 
 def test_fused_html_extraction_build_equals_text_build(spark, tmp_path_factory):
-    """cfg.extract_html runs extraction inside the tokenize kernel; the
-    resulting index must be identical to building from the pre-
-    extracted text column (the byte-identity contract, fused)."""
+    """cfg.extract_html extracts the html column in an Arrow UDF before
+    the tokenizer; the resulting index must be identical to building
+    from the pre-extracted text column (the byte-identity contract)."""
     import math
 
     from pyspark.sql import functions as F
@@ -112,59 +114,42 @@ def test_fused_html_extraction_build_equals_text_build(spark, tmp_path_factory):
             assert math.isclose(x["score"], y["score"], rel_tol=0, abs_tol=1e-9)
 
 
-def test_jvm_and_python_invert_strategies_identical(spark):
-    """The codegen'd posexplode+groupBy inversion and the Arrow kernel
-    must produce identical postings rows (term, tf, positions, dl)."""
-    from pyspark.sql import functions as F
-
+def test_invert_matches_python_reference(spark):
+    """The Arrow inversion over JVM tokens yields exactly the Python
+    reference postings; term_lc and shard are derived from the term."""
+    from hunt_spark.functions.xxh64 import spark_shard
     from hunt_spark.operators.build import BuildConfig, postings_from_contexts
-    from hunt_spark.sources.corpus import corpus_df
 
     docs = corpus_df(spark, 120, partitions=2).withColumn(
         "doc_id", F.xxhash64("url")
     )
-    cxs = {"text": F.col("text")}
-
-    def rows(strategy):
-        p = postings_from_contexts(
-            docs, cxs, BuildConfig(n_shards=4, invert_strategy=strategy)
-        )
-        return sorted(
-            (r["doc_id"], r["context"], r["term"], r["tf"],
-             tuple(r["positions"]), r["dl"], r["term_lc"], r["shard"])
-            for r in p.collect()
-        )
-
-    want = rows("jvm")
-    assert want == rows("python")
-    assert want == rows("arrow")
+    p = postings_from_contexts(
+        docs, {"text": F.col("text")}, BuildConfig(n_shards=4)
+    ).cache()
+    texts = [(r["doc_id"], r["text"]) for r in docs.collect()]
+    assert postings_rows(p) == reference_postings(texts)
+    for r in p.select("context", "term", "term_lc", "shard").collect():
+        assert r["context"] == "text"
+        assert r["term_lc"] == r["term"].lower()
+        assert r["shard"] == spark_shard(r["term_lc"], 4)
+    p.unpersist()
 
 
 def test_arrow_invert_html_extraction_identical(spark):
-    """extract_html path: the fused python kernel and the
-    extract-UDF + JVM-tokenize + Arrow kernel pipeline must produce
-    identical postings (the byte-identical-extraction contract)."""
-    from pyspark.sql import functions as F
-
+    """extract_html: the extract UDF + JVM tokenize + Arrow inversion
+    yields the reference postings of the byte-identical Python
+    extraction (_extract_one)."""
     from hunt_spark.operators.build import BuildConfig, postings_from_contexts
-    from hunt_spark.sources.corpus import corpus_df
 
     docs = corpus_df(spark, 80, partitions=2).withColumn(
         "doc_id", F.xxhash64("url")
     )
-    cxs = {"text": F.col("html")}
-
-    def rows(strategy):
-        p = postings_from_contexts(
-            docs, cxs,
-            BuildConfig(n_shards=4, invert_strategy=strategy, extract_html=True),
-        )
-        return sorted(
-            (r["doc_id"], r["term"], r["tf"], tuple(r["positions"]), r["dl"])
-            for r in p.collect()
-        )
-
-    assert rows("python") == rows("arrow")
+    p = postings_from_contexts(
+        docs, {"text": F.col("html")},
+        BuildConfig(n_shards=4, extract_html=True),
+    )
+    texts = [(r["doc_id"], _extract_one(r["html"])) for r in docs.collect()]
+    assert postings_rows(p) == reference_postings(texts)
 
 
 def test_corpus_determinism_spark_vs_pandas(spark):
@@ -182,37 +167,69 @@ def test_corpus_determinism_spark_vs_pandas(spark):
     assert list(got["lang"]) == list(want["lang"])
 
 
-def test_pack_strategies_identical(spark):
-    """The Arrow-native whole-batch blocks pack and the pandas
-    per-group kernel must emit identical block rows — including
-    byte-identical delta+varbyte buffers and float-identical maxima."""
-    from pyspark.sql import functions as F
+def test_blocks_pack_round_trips_postings(spark):
+    """Each blocks row decodes back to its (context, term_lc, block_id)
+    group of postings — doc ids from the delta+varbyte buffer, terms
+    from ``variants`` (null = term_lc), tf and dl from ``tfs``/``dls``
+    — and max_bm25 is idf x the block's max tf_norm, computed here in
+    numpy with the build's expression."""
+    import math
+    from collections import defaultdict
 
     from hunt_spark.operators.build import (
-        BuildConfig, build_blocks, context_stats, postings_from_contexts,
-        term_stats,
+        BM25_B, BM25_K1, BuildConfig, build_blocks, context_stats,
+        postings_from_contexts, term_stats,
     )
-    from hunt_spark.sources.corpus import corpus_df
 
     docs = corpus_df(spark, 150, partitions=2).withColumn(
         "doc_id", F.xxhash64("url")
     )
     cfg = BuildConfig(n_shards=4, block_size=64)
-    p = postings_from_contexts(docs, {"text": F.col("text")}, cfg)
-    ts, cs = term_stats(p), context_stats(p)
+    p = postings_from_contexts(docs, {"text": F.col("text")}, cfg).cache()
+    blocks = build_blocks(
+        spark, p, term_stats(p), context_stats(p), cfg
+    ).collect()
+    post = p.select("context", "term", "term_lc", "doc_id", "tf", "dl").collect()
+    p.unpersist()
 
-    def rows(strategy):
-        cfgx = BuildConfig(n_shards=4, block_size=64, pack_strategy=strategy)
-        bl = build_blocks(spark, p, ts, cs, cfgx)
-        return sorted(
-            (r["context"], r["shard"], r["term_lc"], r["block_id"],
-             r["n_postings"], r["max_bm25"], r["df"], r["n_blocks"],
-             bytes(r["doc_ids_vb"]), tuple(r["variants"]),
-             tuple(r["tfs"]), tuple(r["dls"]))
-            for r in bl.collect()
+    df = defaultdict(set)
+    for r in post:
+        df[(r["context"], r["term_lc"])].add(r["doc_id"])
+    n_docs = len({r["doc_id"] for r in post})
+    avg_dl = sum(r["tf"] for r in post) / n_docs
+
+    def block_of(doc_id, n_blocks):
+        u32 = ((doc_id >> 32) & 0xFFFFFFFF) ^ 0x80000000
+        return (u32 * n_blocks) >> 32
+
+    want = defaultdict(list)
+    for r in post:
+        n_blocks = max(1, -(-len(df[(r["context"], r["term_lc"])]) // 64))
+        key = (r["context"], r["term_lc"], block_of(r["doc_id"], n_blocks))
+        want[key].append((r["doc_id"], r["term"], r["tf"], r["dl"]))
+
+    assert len(blocks) == len(want)
+    assert any(b["n_blocks"] > 1 for b in blocks)
+    for b in blocks:
+        key = (b["context"], b["term_lc"], b["block_id"])
+        ids = [int(x) for x in delta_varbyte_decode(bytes(b["doc_ids_vb"]))]
+        assert ids == sorted(ids) and len(ids) == b["n_postings"]
+        got = [
+            (i, v if v is not None else b["term_lc"], tf, dl)
+            for i, v, tf, dl in zip(ids, b["variants"], b["tfs"], b["dls"])
+        ]
+        assert sorted(got) == sorted(want[key]), key
+        d = len(df[(b["context"], b["term_lc"])])
+        assert b["df"] == d and b["n_blocks"] == max(1, -(-d // 64))
+        tf = np.asarray(b["tfs"], dtype=np.float64)
+        dl = np.asarray(b["dls"], dtype=np.float64)
+        tfn = (tf * (BM25_K1 + 1.0)) / (
+            tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avg_dl)
         )
-
-    assert rows("python") == rows("arrow")
+        idf = np.log(1.0 + (float(n_docs) - d + 0.5) / (d + 0.5))
+        # numpy's log and the JVM's StrictMath.log disagree in the last
+        # bit for some arguments (40 of d = 1..150 at N = 150)
+        assert math.isclose(b["max_bm25"], idf * tfn.max(), rel_tol=1e-14), key
 
 
 def test_context_stats_single_shuffle_equals_per_doc_form(engine):

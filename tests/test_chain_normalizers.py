@@ -11,8 +11,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from hunt_spark.engine import HuntEngine
-from hunt_spark.functions.analysis import chain_norm_py, zerofill_norm_py
+from hunt_spark.functions.analysis import (
+    chain_norm_py,
+    tokenize_py,
+    zerofill_norm_py,
+)
 from hunt_spark.operators.build import BuildConfig, postings_from_contexts
+
+from conftest import postings_rows, reference_postings
 
 
 def test_zerofill_reference_form():
@@ -34,25 +40,18 @@ def test_chain_folds_left_to_right():
     assert chain_norm_py("12", ["ZeroFill", "UpperCase"]) == "1" + "0" * 18 + "12"
 
 
-def test_build_applies_chain_all_strategies(spark):
+def test_build_applies_chain(spark):
     docs = spark.createDataFrame(
         [("u://1", "Alpha beta ALPHA")], "url string, body string"
     ).withColumn("doc_id", F.xxhash64("url"))
-
-    def terms(strategy):
-        cfg = BuildConfig(
-            n_shards=2,
-            invert_strategy=strategy,
-            context_normalizers={"body": ["UpperCase"]},
-        )
-        p = postings_from_contexts(docs, {"body": F.col("body")}, cfg)
-        return sorted((r["term"], r["tf"]) for r in p.collect())
-
-    want = terms("jvm")
+    cfg = BuildConfig(n_shards=2, context_normalizers={"body": ["UpperCase"]})
+    got = postings_rows(postings_from_contexts(docs, {"body": F.col("body")}, cfg))
     # the three case variants collapse onto the uppercased key
-    assert want == [("ALPHA", 2), ("BETA", 1)]
-    assert terms("python") == want
-    assert terms("arrow") == want
+    assert [(r[1], r[2]) for r in got] == [("ALPHA", 2), ("BETA", 1)]
+    assert got == reference_postings(
+        [(got[0][0], "Alpha beta ALPHA")],
+        lambda t: [chain_norm_py(w, ["UpperCase"]) for w in tokenize_py(t)],
+    )
 
 
 @pytest.fixture()

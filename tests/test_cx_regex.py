@@ -21,6 +21,8 @@ from hunt_spark.functions.analysis import (
 )
 from hunt_spark.operators.build import BuildConfig, postings_from_contexts
 
+from conftest import postings_rows, reference_postings
+
 DATE_RX = REFERENCE_SCAN_REGEXES["date"]
 # the reference test's whitespace-word regex ("[^ \t\n\r]*",
 # AnalyzerTests.hs:219 — scan-then-drop-empties, so + here)
@@ -119,41 +121,33 @@ def test_date_context_regex_scan_engine(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# tokenize-stage override on a text context: all three invert
-# strategies agree, and non-word tokens survive verbatim
+# tokenize-stage override on a text context: postings match the
+# scan_py reference, and non-word tokens survive verbatim
 # ---------------------------------------------------------------------------
 
 
-def test_text_context_custom_regex_strategies_identical(spark):
-    docs = spark.createDataFrame(
-        [
-            ("https://x.org/a", "w1! w2?  w3 w1!"),
-            ("https://x.org/b", "tag:a tag:b plain"),
-        ],
-        "url string, body string",
-    ).withColumn("doc_id", F.xxhash64("url"))
-
-    def rows(strategy):
-        cfg = BuildConfig(
-            n_shards=4,
-            invert_strategy=strategy,
-            context_regexes={"body": WS_RX},
-        )
-        p = postings_from_contexts(docs, {"body": F.col("body")}, cfg)
-        return sorted(
-            (r["doc_id"], r["term"], r["tf"], tuple(r["positions"]), r["dl"])
-            for r in p.collect()
-        )
-
-    want = rows("jvm")
-    assert want == rows("python")
-    assert want == rows("arrow")
+def test_text_context_custom_regex_matches_reference(spark):
+    texts = [
+        ("https://x.org/a", "w1! w2?  w3 w1!"),
+        ("https://x.org/b", "tag:a tag:b plain"),
+    ]
+    docs = spark.createDataFrame(texts, "url string, body string").withColumn(
+        "doc_id", F.xxhash64("url")
+    )
+    cfg = BuildConfig(n_shards=4, context_regexes={"body": WS_RX})
+    got = postings_rows(
+        postings_from_contexts(docs, {"body": F.col("body")}, cfg)
+    )
+    ids = {r["url"]: r["doc_id"] for r in docs.collect()}
+    assert got == reference_postings(
+        [(ids[u], t) for u, t in texts], lambda t: scan_py(t, WS_RX)
+    )
     # whitespace-scan tokens keep their punctuation ("w1!" is a term,
     # tf 2) — the \w+ default would have produced "w1"
-    by_term = {(r[1]): r for r in want if r[1].startswith("w1")}
+    by_term = {(r[1]): r for r in got if r[1].startswith("w1")}
     assert set(by_term) == {"w1!"}
     assert by_term["w1!"][2] == 2 and by_term["w1!"][3] == (1, 4)
-    assert any(r[1] == "tag:a" for r in want)
+    assert any(r[1] == "tag:a" for r in got)
 
 
 def test_default_scan_unchanged_without_override(spark):
@@ -226,29 +220,24 @@ def test_insert_context_bad_regex_rejected(spark, tmp_path_factory):
         eng.insert_context("x", ctype="text", regex="([unclosed")
 
 
-def test_unicode_word_scan_parity_across_strategies(spark, tmp_path_factory):
-    """(?U) on the JVM scan: the same cxRegEx (r'\\w+') must tokenize
-    'café' identically on the arrow/jvm strategies (Java ASCII \\w
-    without the flag) and the python kernel (Unicode \\w) — one config,
-    one index."""
-    from hunt_spark.engine import HuntEngine
-    from hunt_spark.operators.build import BuildConfig
-
-    docs_pdf = [("u1", "café naïve zürich plain")]
-    results = {}
-    for strategy in ("arrow", "python", "jvm"):
-        eng = HuntEngine(
-            spark,
-            str(tmp_path_factory.mktemp(f"uni_{strategy}")),
-            BuildConfig(
-                n_shards=4,
-                invert_strategy=strategy,
-                context_regexes={"text": r"\w+"},
-            ),
+def test_unicode_word_scan_custom_regex(spark, tmp_path_factory):
+    """(?U) on the JVM scan: the cxRegEx r'\\w+' must tokenize 'café'
+    as one Unicode word, as scan_py (Python's Unicode \\w) does — Java's
+    \\w without the flag is ASCII-only and would split it — and the
+    query 'café' must find the document."""
+    text = "café naïve zürich plain"
+    docs = spark.createDataFrame([("u1", text)], "url string, text string")
+    cfg = BuildConfig(n_shards=4, context_regexes={"text": r"\w+"})
+    got = postings_rows(
+        postings_from_contexts(
+            docs.withColumn("doc_id", F.xxhash64("url")),
+            {"text": F.col("text")}, cfg,
         )
-        docs = spark.createDataFrame(docs_pdf, "url string, text string")
-        eng.build(docs, {"text": F.col("text")}, build_id=f"u_{strategy}")
-        results[strategy] = {
-            r["url"] for r in eng.search("'café'", k=5).collect()
-        }
-    assert results["arrow"] == results["python"] == results["jvm"] == {"u1"}
+    )
+    assert {r[1] for r in got} == {"café", "naïve", "zürich", "plain"}
+    assert got == reference_postings(
+        [(got[0][0], text)], lambda t: scan_py(t, r"\w+")
+    )
+    eng = HuntEngine(spark, str(tmp_path_factory.mktemp("uni")), cfg)
+    eng.build(docs, {"text": F.col("text")}, build_id="u")
+    assert {r["url"] for r in eng.search("'café'", k=5).collect()} == {"u1"}

@@ -61,3 +61,56 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(df.columns) == {"doc_id", "score_x1e4"}
+
+
+# the gate order queries() and oracle_sql() expose (a correctness run
+# may cover only a window of the first entries): changing it must be a
+# deliberate edit here
+GATE_ORDER = [
+    "dedup_span_stats", "dedup_strip_spans", "dedup_cluster",
+    "dedup_embedding", "emb_cosine_topk", "emb_ann_lsh", "emb_ann_ivf",
+    "mm_payload_meta", "mm_frame_sample", "mm_near_dup", "mm_decode_png",
+    "crawl_frontier", "evt_sessionize", "cmp_query_and",
+    "idx_phrase", "idx_near", "idx_follow", "idx_bm25_prefix",
+    "idx_bm25_range", "idx_wand_and", "idx_wand_or", "idx_bm25_offset",
+    "idx_prefix_word_limit", "idx_prefix_doc_limit", "idx_int_range",
+    "idx_date_range", "idx_date_regex_scan", "idx_date_tz_range",
+    "idx_geo_rect", "idx_geo_rtree", "idx_text_small", "idx_selector_title",
+    "idx_completion", "txt_pii", "txt_clean", "txt_repetition",
+    "txt_contamination", "txt_line_dedup", "op_sample_stratified",
+    "op_sample_weighted", "pipeline_kept", "src_warc_ingest",
+    "web_url_canonical", "web_url_dedup", "web_url_filter",
+    "web_domain_cap", "dedup_ngram_jaccard", "dedup_minhash_lsh",
+    "dedup_simhash", "dedup_substring",
+    "idx_term_lookup", "idx_bool_and", "idx_bool_or", "idx_bool_andnot",
+    "idx_bm25_single", "idx_bm25_and", "idx_bm25_or", "idx_bm25_boost",
+    "txt_token_count", "txt_token_count_bpe", "txt_quality",
+    "txt_fingerprint", "txt_langid", "dedup_exact",
+]
+
+
+def test_gate_order_is_pinned():
+    assert list(entrymod.queries()) == GATE_ORDER
+    assert list(entrymod.oracle_sql()) == GATE_ORDER
+
+
+def test_oracle_sql_tolerates_rows_only_gates(monkeypatch):
+    real = entrymod.queries()
+    monkeypatch.setattr(
+        entrymod, "queries", lambda: {**real, "rows_only_probe": None}
+    )
+    assert list(entrymod.oracle_sql()) == GATE_ORDER
+
+
+def test_reorder_gates_rejects_unknown_or_overlapping_names(monkeypatch):
+    gates = {k: None for k in GATE_ORDER}
+    assert list(entrymod._reorder_gates(gates)) == GATE_ORDER
+    renamed = {("x_" + k if k == "emb_ann_ivf" else k): v
+               for k, v in gates.items()}
+    with pytest.raises(AssertionError, match="emb_ann_ivf"):
+        entrymod._reorder_gates(renamed)
+    monkeypatch.setattr(
+        entrymod, "_GATE_RESERVE", entrymod._GATE_RESERVE + ["emb_ann_lsh"]
+    )
+    with pytest.raises(AssertionError, match="overlap"):
+        entrymod._reorder_gates(gates)

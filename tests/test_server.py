@@ -5,6 +5,7 @@ Exercised end-to-end over a real socket with urllib."""
 from __future__ import annotations
 
 import json
+import logging
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -326,3 +327,34 @@ def test_store_and_load_commands(server, tmp_path):
         _send(server, "POST", "/eval",
               {"cmd": "load", "path": str(tmp_path / "nope")})
     assert ei.value.code == 404
+
+
+def test_500_traceback_is_logged(caplog):
+    """A 500 replies with the message only; the traceback must reach
+    the hunt_spark.server log, and request lines go there at DEBUG."""
+    srv = HuntServer(engine=None).start()
+
+    def boom(path):
+        raise RuntimeError(f"kernel exploded on {path}")
+
+    srv.handle_get = boom
+    try:
+        with caplog.at_level(logging.DEBUG, logger="hunt_spark.server"):
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                _get(srv, "/search/boom")
+    finally:
+        srv.shutdown()
+        srv.httpd.server_close()
+    assert ei.value.code == 500
+    assert json.loads(ei.value.read())["msg"] == (
+        "kernel exploded on /search/boom"
+    )
+    errors = [r for r in caplog.records if r.levelno == logging.ERROR]
+    assert len(errors) == 1 and errors[0].name == "hunt_spark.server"
+    assert "GET /search/boom" in errors[0].getMessage()
+    assert errors[0].exc_info[0] is RuntimeError
+    assert "in boom" in caplog.text and "Traceback" in caplog.text
+    assert any(
+        r.levelno == logging.DEBUG and "GET /search/boom" in r.getMessage()
+        for r in caplog.records
+    )

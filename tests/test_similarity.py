@@ -4,6 +4,8 @@ deterministic, return only true cosines, and reach useful recall."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,38 +81,156 @@ def test_lsh_ann_recall(emb, exact):
     assert _recall(got4, exact) >= _recall(got, exact)
 
 
+def _fold_dot(v, w):
+    # the Catalyst aggregate's association, one scalar at a time
+    acc = 0.0
+    for x, p in zip(v, w):
+        acc = acc + float(x) * float(p)
+    return acc
+
+
+def _round_x1e4(c):
+    # Spark's F.round is HALF_UP (Python's round() is half-even)
+    x = c * 10000
+    return int(math.floor(x + 0.5)) if x >= 0 else -int(math.floor(-x + 0.5))
+
+
+def _fold_cosine_x1e4(v, w):
+    # with_cosine's literal expression: dot / (|v| * |w|), every sum
+    # folded in array order, 0 for a zero-norm side
+    den = math.sqrt(_fold_dot(v, v)) * math.sqrt(_fold_dot(w, w))
+    return _round_x1e4(_fold_dot(v, w) / den if den else 0.0)
+
+
+def _expr_plan_topk(vecs, probes, keys, k):
+    """The ANN plans evaluated literally in Python: each probe's
+    candidates are the other vectors whose key set meets the probe's,
+    scored by the folded cosine, ranked (cosine DESC, id ASC)."""
+    out = []
+    for p in probes:
+        scored = sorted(
+            (-_fold_cosine_x1e4(vecs[p], vecs[n]), n)
+            for n in vecs
+            if n != p and keys[p]["probe"] & keys[n]["corpus"]
+        )
+        out += [(p, n, -c, r) for r, (c, n) in enumerate(scored[:k], 1)]
+    return sorted(out)
+
+
 def test_udf_strategy_matches_expr(emb):
-    # the broadcast-matrix pandas-UDF scale path must reproduce the
-    # literal-expression path exactly at the small config
-    e = sorted(map(tuple, ivf_ann_topk(
-        emb, PROBES, k=K, dim=64, strategy="expr").collect()))
-    u = sorted(map(tuple, ivf_ann_topk(
-        emb, PROBES, k=K, dim=64, strategy="udf").collect()))
-    assert e == u
-    el = sorted(map(tuple, lsh_ann_topk(
-        emb, PROBES, k=K, dim=64, strategy="expr").collect()))
-    ul = sorted(map(tuple, lsh_ann_topk(
-        emb, PROBES, k=K, dim=64, strategy="udf").collect()))
-    assert el == ul
+    """The Arrow-kernel scale path of both ANN operators reproduces the
+    literal-expression plan exactly at the small config: the same
+    cells or signatures, candidates, cosines and ranks."""
+    from hunt_spark.operators.similarity import _hyperplanes, ivf_centroids
+
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    cents = ivf_centroids(64, 16)
+    keys = {}
+    for i, v in vecs.items():
+        dots = [_fold_dot(v, c) for c in cents]
+        ranked = sorted(range(16), key=lambda c: (-dots[c], c))
+        keys[i] = {"corpus": {dots.index(max(dots))},
+                   "probe": set(ranked[:4])}
+    got = sorted(map(tuple, ivf_ann_topk(
+        emb, PROBES, k=K, dim=64).collect()))
+    assert got == _expr_plan_topk(vecs, PROBES, keys, K)
+
+    planes = _hyperplanes(64, 8)
+    for i, v in vecs.items():
+        sig = sum(1 << b for b, p in enumerate(planes) if _fold_dot(v, p) >= 0)
+        keys[i] = {"corpus": {sig},
+                   "probe": {sig} | {sig ^ (1 << b) for b in range(8)}}
+    got = sorted(map(tuple, lsh_ann_topk(
+        emb, PROBES, k=K, dim=64).collect()))
+    assert got == _expr_plan_topk(vecs, PROBES, keys, K)
+
+
+def test_signature_and_cell_kernel_match_sequential_fold(spark, emb):
+    """The one embedding kernel reproduces a scalar left-to-right fold
+    of every dot product — the association of the literal-plane DuckDB
+    oracles — so LSH bits, band signatures, the IVF cell (first max)
+    and the probe cells (dot DESC, cell ASC) are exact; a null vector
+    yields null everywhere. Besides the gate corpus, the rows include
+    near-ties whose outcome depends on the summation order (a BLAS
+    matmul fails here): vectors orthogonal to a plane up to rounding,
+    and sums of two centroids, equidistant from both."""
+    import numpy as np
+
+    from hunt_spark.operators.similarity import (
+        _hyperplanes,
+        band_signatures,
+        ivf_centroids,
+        nearest_cells,
+    )
+
+    planes8, planes16 = _hyperplanes(64, 8), _hyperplanes(64, 16)
+    cents = ivf_centroids(64, 16)
+    rng = np.random.Generator(np.random.Philox(key=[3, 4]))
+    ties = []
+    for i in range(160):
+        x = rng.normal(size=64)
+        p = planes8[i % 8]
+        ties.append(x - (x @ p) / (p @ p) * p)
+    ties += [cents[a] + cents[b] for a in range(16) for b in range(a + 1, 16)]
+    df = (
+        emb.select("vec_id", F.col("embedding").cast("array<double>"))
+        .unionByName(spark.createDataFrame(
+            [(10**9, None)] + [(10**9 + 1 + i, v.tolist())
+                               for i, v in enumerate(ties)],
+            "vec_id long, embedding array<double>",
+        ))
+    )
+    rows = df.select(
+        "vec_id", "embedding",
+        band_signatures(df, "embedding", planes8)[0].alias("sig"),
+        band_signatures(df, "embedding", planes16, 8).alias("bands"),
+        nearest_cells(df, "embedding", cents, 1)[0].alias("cell"),
+        nearest_cells(df, "embedding", cents, 4).alias("probe"),
+    ).collect()
+    assert len(rows) == 501 + len(ties)
+    for r in rows:
+        v = r["embedding"]
+        if v is None:
+            assert (r["sig"], r["bands"], r["cell"], r["probe"]) == (
+                None, None, None, None)
+            continue
+        bits8 = [_fold_dot(v, p) >= 0 for p in planes8]
+        assert r["sig"] == sum(1 << i for i, b in enumerate(bits8) if b)
+        bits16 = [_fold_dot(v, p) >= 0 for p in planes16]
+        assert r["bands"] == [
+            bits16[2 * j] + 2 * bits16[2 * j + 1] for j in range(8)
+        ]
+        dots = [_fold_dot(v, c) for c in cents]
+        ranked = sorted(range(16), key=lambda i: (-dots[i], i))
+        assert r["cell"] == dots.index(max(dots)) + 1 == ranked[0] + 1
+        assert r["probe"] == [i + 1 for i in ranked[:4]]
+    short = spark.createDataFrame(
+        [(0, [1.0] * 63)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match=r"embedding lengths \[63\] != dim 64"):
+        short.select(nearest_cells(short, "embedding", cents, 1)).collect()
 
 
 def test_udf_strategy_smoke_at_production_config(spark):
-    # 256 cells x 256 dims = 65k literals — over EXPR_LITERAL_LIMIT, so
-    # auto must route to the UDF path and the plan must still execute
+    # 256 cells x 256 dims: the production shape of the cell matrix.
+    # A null embedding must neither crash the batch kernel nor become
+    # anyone's neighbor, and a null probe finds nothing.
     import numpy as np
 
-    from hunt_spark.operators.similarity import EXPR_LITERAL_LIMIT
-
-    assert 256 * 256 > EXPR_LITERAL_LIMIT
     rng = np.random.Generator(np.random.Philox(key=[1, 2]))
     rows = [(i, rng.normal(size=256).astype("float32").tolist())
             for i in range(300)]
+    rows.append((300, None))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = ivf_ann_topk(
-        df, [0, 1], k=3, n_cells=256, n_probe=64, dim=256
-    ).collect()
-    assert {r["probe_id"] for r in got} == {0, 1}
-    assert all(r["rank"] <= 3 for r in got)
+    for got in (
+        ivf_ann_topk(
+            df, [0, 1, 300], k=3, n_cells=256, n_probe=64, dim=256
+        ).collect(),
+        lsh_ann_topk(df, [0, 1, 300], k=3, dim=256).collect(),
+    ):
+        assert {r["probe_id"] for r in got} == {0, 1}
+        assert all(r["rank"] <= 3 for r in got)
+        assert 300 not in {r["neighbor_id"] for r in got}
 
 
 def test_ivf_deterministic_across_partitioning(spark, emb, exact):
@@ -164,20 +284,46 @@ def test_near_dup_pairs_true_cosines_ordered_and_high_recall(emb):
 
 
 def test_near_dup_udf_strategy_matches_expr(emb):
-    from hunt_spark.operators.similarity import embedding_near_dup_pairs
+    """The banded-signature kernel path reproduces the literal-
+    expression plan exactly: a pair is a candidate iff some band's
+    folded sign bits agree, and qualifies on its folded cosine."""
+    import numpy as np
 
-    def key(rows):
-        return sorted(
-            (r["vec_id_a"], r["vec_id_b"], r["cosine_x1e4"]) for r in rows
-        )
+    from hunt_spark.operators.similarity import (
+        _hyperplanes,
+        embedding_near_dup_pairs,
+    )
 
-    ex = embedding_near_dup_pairs(
-        emb, threshold=0.45, dim=64, strategy="expr"
-    ).collect()
-    ud = embedding_near_dup_pairs(
-        emb, threshold=0.45, dim=64, strategy="udf"
-    ).collect()
-    assert key(ex) == key(ud)
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    planes = _hyperplanes(64, 16)
+    bands = {}
+    for i, v in vecs.items():
+        bits = [_fold_dot(v, p) >= 0 for p in planes]
+        bands[i] = [(j, bits[2 * j] + 2 * bits[2 * j + 1]) for j in range(8)]
+    ids = sorted(vecs)
+    m = np.array([vecs[i] for i in ids], dtype=np.float64)
+    # every pair's dot, folded one dimension at a time (array order)
+    dots = np.zeros((len(ids), len(ids)))
+    for d in range(m.shape[1]):
+        dots += np.multiply.outer(m[:, d], m[:, d])
+    norms = np.sqrt(np.diag(dots))
+    want = []
+    for a in range(len(ids)):
+        for b in range(a + 1, len(ids)):
+            if not set(bands[ids[a]]) & set(bands[ids[b]]):
+                continue
+            den = norms[a] * norms[b]
+            c = _round_x1e4(float(dots[a, b] / den) if den else 0.0)
+            if c >= 4500:
+                want.append((ids[a], ids[b], c))
+    assert want
+    got = sorted(
+        (r["vec_id_a"], r["vec_id_b"], r["cosine_x1e4"])
+        for r in embedding_near_dup_pairs(
+            emb, threshold=0.45, dim=64
+        ).collect()
+    )
+    assert got == want
 
 
 def test_near_dup_empty_and_bad_bands(spark, emb):
@@ -192,8 +338,8 @@ def test_near_dup_empty_and_bad_bands(spark, emb):
 def test_near_dup_null_first_vector_does_not_degenerate(spark, emb):
     """dim-sniff used .first(): a NULL embedding in row one returned an
     EMPTY pairs frame for the whole table. Nulls must be skipped for
-    sniffing and must flow through both signature strategies as
-    null (dropped by the band join), not crash the Arrow kernel."""
+    sniffing and must flow through the signature kernel as null
+    (dropped by the band join), not crash it."""
     from hunt_spark.operators.similarity import embedding_near_dup_pairs
 
     nulled = spark.createDataFrame(
@@ -203,14 +349,13 @@ def test_near_dup_null_first_vector_does_not_degenerate(spark, emb):
         (r["vec_id_a"], r["vec_id_b"])
         for r in embedding_near_dup_pairs(emb, threshold=0.45).collect()
     )
-    for strat in ("expr", "udf"):
-        got = set(
-            (r["vec_id_a"], r["vec_id_b"])
-            for r in embedding_near_dup_pairs(
-                nulled, threshold=0.45, strategy=strat, dim=None
-            ).collect()
-        )
-        assert got == base
+    got = set(
+        (r["vec_id_a"], r["vec_id_b"])
+        for r in embedding_near_dup_pairs(
+            nulled, threshold=0.45, dim=None
+        ).collect()
+    )
+    assert got == base
 
 
 def test_cosine_topk_null_and_zero_vectors(spark):

@@ -5,22 +5,19 @@ indexed zero postings for every typed context on an html build."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from hunt_spark.engine import HuntEngine
 from hunt_spark.operators.build import BuildConfig
 
 
-@pytest.mark.parametrize("strategy", ["arrow", "python", "jvm"])
-def test_typed_context_over_html_input(spark, tmp_path_factory, strategy):
+def test_typed_context_over_html_input(spark, tmp_path_factory):
     eng = HuntEngine(
         spark,
-        str(tmp_path_factory.mktemp(f"th_{strategy}")),
+        str(tmp_path_factory.mktemp("th")),
         BuildConfig(
             n_shards=4,
             extract_html=True,
-            invert_strategy=strategy,
             context_types={"pub": "date"},
         ),
     )
@@ -37,7 +34,7 @@ def test_typed_context_over_html_input(spark, tmp_path_factory, strategy):
     eng.build(
         docs,
         {"body": F.col("html"), "pub": F.col("html")},
-        build_id=f"th_{strategy}",
+        build_id="th",
     )
     u1 = (
         spark.createDataFrame([("u1",)], "url string")
