@@ -108,7 +108,7 @@ def _typed_engine(spark: SparkSession, sf_dir: str) -> HuntEngine:
                 context_regexes={
                     "logline": REFERENCE_SCAN_REGEXES["date"],
                 },
-                build_blocks=False, build_term_dict=False,
+                build_blocks=False,
             ),
         )
         eng.build(
@@ -133,7 +133,7 @@ def _small_engine(spark: SparkSession, sf_dir: str) -> HuntEngine:
             BuildConfig(
                 n_shards=4, salt_buckets=2,
                 context_types={"text": "text-small"},
-                build_blocks=False, build_term_dict=False,
+                build_blocks=False,
             ),
         )
         eng.build(_docs(spark, sf_dir), {"text": F.col("text")}, build_id=key)
@@ -169,7 +169,7 @@ def _selector_engine(spark: SparkSession, sf_dir: str) -> HuntEngine:
                 n_shards=4, salt_buckets=2,
                 extract_html=True,
                 context_selectors={"title": "title", "body": "body"},
-                build_blocks=False, build_term_dict=False,
+                build_blocks=False,
             ),
         )
         eng.build(
@@ -481,39 +481,36 @@ def _mm_decode_png_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Driver-gate window allocation (r5 verdict, next-round #1): the
-# driver's CORRECTNESS artifact covers the first 50 queries() entries in
-# dict order, and r5 left the 14 newest/riskiest gates at positions
-# 51-64 with no driver row.  Front-load exactly those 14
-# (never-driver-confirmed: evt_sessionize — the one historically red
-# gate — dedup_span_stats/strip_spans/embedding, mm_decode_png,
-# crawl_frontier; dropped-out-of-window-in-r5: dedup_cluster, emb_*,
-# mm_*, cmp_query_and) and rotate 14 multi-round-stable gates (each
-# driver-green 3-5 consecutive rounds) to the tail as the reserve.
-# Pure reordering: every gate's callable and oracle SQL string are
-# byte-identical, only dict insertion order changes.
-_GATE_FRONT = [
+# The gate order queries() and oracle_sql() expose. A correctness run
+# may cover only a window of the first entries, so the order allocates
+# that window: the newest/riskiest gates first (evt_sessionize — the
+# one historically red gate — the dedup span/embedding gates,
+# mm_decode_png, crawl_frontier, and the gates that once fell out of
+# the window), multi-round-stable gates (each green 3-5 consecutive
+# rounds) last as the reserve. queries()
+# asserts that this list names exactly its gates, so a renamed, added
+# or deleted gate fails loudly instead of silently leaving the window.
+GATE_ORDER = [
     "dedup_span_stats", "dedup_strip_spans", "dedup_cluster",
     "dedup_embedding", "emb_cosine_topk", "emb_ann_lsh", "emb_ann_ivf",
     "mm_payload_meta", "mm_frame_sample", "mm_near_dup", "mm_decode_png",
     "crawl_frontier", "evt_sessionize", "cmp_query_and",
-]
-_GATE_RESERVE = [
+    "idx_phrase", "idx_near", "idx_follow", "idx_bm25_prefix",
+    "idx_bm25_range", "idx_wand_and", "idx_wand_or", "idx_bm25_offset",
+    "idx_prefix_word_limit", "idx_prefix_doc_limit", "idx_int_range",
+    "idx_date_range", "idx_date_regex_scan", "idx_date_tz_range",
+    "idx_geo_rect", "idx_geo_rtree", "idx_text_small", "idx_selector_title",
+    "idx_completion", "txt_pii", "txt_clean", "txt_repetition",
+    "txt_contamination", "txt_line_dedup", "op_sample_stratified",
+    "op_sample_weighted", "pipeline_kept", "src_warc_ingest",
+    "web_url_canonical", "web_url_dedup", "web_url_filter",
+    "web_domain_cap", "dedup_ngram_jaccard", "dedup_minhash_lsh",
+    "dedup_simhash", "dedup_substring",
     "idx_term_lookup", "idx_bool_and", "idx_bool_or", "idx_bool_andnot",
     "idx_bm25_single", "idx_bm25_and", "idx_bm25_or", "idx_bm25_boost",
     "txt_token_count", "txt_token_count_bpe", "txt_quality",
     "txt_fingerprint", "txt_langid", "dedup_exact",
 ]
-
-
-def _reorder_gates(d: dict) -> dict:
-    # a renamed or deleted gate must fail loudly here, not silently
-    # drop out of the window the two lists allocate
-    assert not set(_GATE_FRONT) & set(_GATE_RESERVE), "front/reserve overlap"
-    missing = [k for k in _GATE_FRONT + _GATE_RESERVE if k not in d]
-    assert not missing, f"front/reserve name unknown gates: {missing}"
-    mid = [k for k in d if k not in _GATE_FRONT and k not in _GATE_RESERVE]
-    return {k: d[k] for k in _GATE_FRONT + mid + _GATE_RESERVE}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -913,7 +910,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .limit(10)
         ),
     }
-    return _reorder_gates(base)
+    odd = set(GATE_ORDER) ^ set(base)
+    assert not odd and len(GATE_ORDER) == len(base), (
+        f"GATE_ORDER must name each queries() gate once; differing: {sorted(odd)}"
+    )
+    return {k: base[k] for k in GATE_ORDER}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -1906,7 +1907,6 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY term ORDER BY score_x1e4 DESC, term ASC LIMIT 10
         """,
     }
-    # mirror queries()' exact entry order (not just the front/reserve
-    # split) so the two dicts stay positionally aligned; a rows-only
-    # gate (no oracle SQL) is simply absent here
-    return {k: base[k] for k in queries() if k in base}
+    # queries()' order, so the two dicts stay positionally aligned; a
+    # rows-only gate (no oracle SQL) is simply absent here
+    return {k: base[k] for k in GATE_ORDER if k in base}

@@ -14,9 +14,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hunt_spark.operators.build import (
+    STATS_TABLES,
     BuildConfig,
     build_index,
-    context_stats,
+    commit_all_stats,
+    commit_blocks,
+    commit_stats,
     postings_from_contexts,
     term_stats,
     term_totals,
@@ -298,12 +301,9 @@ class HuntEngine:
                 return None
             # blocks must postdate the newest postings mutation: insert/
             # update commit fresh postings snapshots the blocks artifact
-            # doesn't reflect. Compared by manifest seq (the append
-            # order == commit order); snapshot-id strings would order
-            # randomly for two commits in the same millisecond.
-            snaps_b = self.catalog.snapshots("blocks")
-            snaps_p = self.catalog.snapshots("postings")
-            if not snaps_b or (snaps_p and snaps_b[-1]["seq"] < snaps_p[-1]["seq"]):
+            # doesn't reflect (tombstones are gated by the row check
+            # above, so a rebuild over pending deletes stays closed)
+            if not self._derived_fresh(["blocks"], deps=("postings",)):
                 self._wand_unavailable = "blocks artifact stale or missing"
                 return None
             try:
@@ -571,24 +571,16 @@ class HuntEngine:
         )
 
     def _fresh_term_totals(self) -> DataFrame | None:
-        """term_totals artifact iff it reflects the current doc set:
-        its commit must postdate the newest postings mutation AND the
-        newest tombstone append (manifest seq, like the WAND blocks
-        gate; _refresh_stats recommits it tombstone-filtered after
-        every mutation, so this is normally fresh). Stale or missing ->
-        None, caller falls back to the postings scan. Manifest-only —
-        no Spark job on the serving path; the frame is cached until the
+        """term_totals artifact iff it reflects the current doc set
+        (_derived_fresh; _refresh_stats recommits it tombstone-filtered
+        after every mutation, so this is normally fresh). Stale or
+        missing -> None, caller falls back to the postings scan. No
+        Spark job on the serving path; the frame is cached until the
         next mutation so repeat completions skip the catalog re-read."""
         if self._term_totals is not None:
             return self._term_totals
-        snaps_t = self.catalog.snapshots("term_totals")
-        if not snaps_t:
+        if not self._derived_fresh(["term_totals"]):
             return None
-        seq = snaps_t[-1]["seq"]
-        for dep in ("postings", "tombstones"):
-            dep_snaps = self.catalog.snapshots(dep)
-            if dep_snaps and dep_snaps[-1]["seq"] > seq:
-                return None
         try:
             self._term_totals = self.catalog.read(self.spark, "term_totals")
         except FileNotFoundError:
@@ -688,7 +680,9 @@ class HuntEngine:
         # tombstoned doc_ids, which would double-count df/n_docs) is
         # only enforced when validate_uris is on, so an unvalidated
         # insert must take the full recompute path to stay exact
-        stats_were_fresh = refresh_stats and validate_uris and self._stats_fresh()
+        stats_were_fresh = (
+            refresh_stats and validate_uris and self._derived_fresh()
+        )
         docs = docs.withColumn("doc_id", F.xxhash64("url"))
         if validate_uris:
             dup = (
@@ -982,31 +976,33 @@ class HuntEngine:
             )
         except FileNotFoundError:
             return
-        self.catalog.commit(t, "tombstones", "delete/docs", mode="append")
-        self._refresh_stats()
+        self._tombstone(t, "delete/docs")
 
     @_mutating
     def delete_by_query(self, query) -> None:
-        ids = self.select(query)
-        self.catalog.commit(ids, "tombstones", "delete/query", mode="append")
+        self._tombstone(self.select(query), "delete/query")
+
+    def _tombstone(self, ids: DataFrame, key: str) -> None:
+        """Append ``ids`` as a tombstones delta and refresh the stats.
+        No match commits nothing: an empty delta would still cost a
+        full O(corpus) stats refresh and empty the plan cache."""
+        if ids.isEmpty():
+            return
+        self.catalog.commit(ids, "tombstones", key, mode="append")
         self._refresh_stats()
 
-    def _stats_fresh(self) -> bool:
-        """True iff all three stats artifacts postdate the newest
-        postings AND tombstone commit (manifest seq, same gate as
-        _fresh_term_totals / the WAND blocks gate) — i.e. they exactly
-        describe the current live doc set. Manifest-only, no Spark
-        job."""
-        dep_seq = -1
-        for dep in ("postings", "tombstones"):
-            s = self.catalog.snapshots(dep)
-            if s:
-                dep_seq = max(dep_seq, s[-1]["seq"])
-        for t in ("context_stats", "term_stats", "term_totals"):
-            s = self.catalog.snapshots(t)
-            if not s or s[-1]["seq"] < dep_seq:
-                return False
-        return True
+    def _derived_fresh(
+        self, tables=tuple(STATS_TABLES), deps=("postings", "tombstones")
+    ) -> bool:
+        """True iff every derived table in ``tables`` was committed
+        after the newest snapshot of every table in ``deps`` — i.e. it
+        describes the current doc set. Compared by manifest seq (the
+        append order == commit order); snapshot-id strings would order
+        randomly for two commits in the same millisecond. Manifest-only,
+        no Spark job."""
+        newest = {e["table"]: e["seq"] for e in self.catalog.snapshots()}
+        dep_seq = max((newest.get(d, -1) for d in deps), default=-1)
+        return all(t in newest and newest[t] >= dep_seq for t in tables)
 
     def _refresh_stats_incremental(self, new_p: DataFrame) -> None:
         """Merge a disjoint insert batch's stats into the stored stats
@@ -1089,17 +1085,12 @@ class HuntEngine:
                 (F.col("tot_tf") / F.col("n_docs")).alias("avg_dl"),
             )
         )
-        self.catalog.commit(
-            merged_cs, "context_stats", "insert/context_stats_delta"
-        )
-        self.catalog.commit(
-            merged_ts, "term_stats", "insert/term_stats_delta",
-            sort_within_by=["context", "term_lc"],
-        )
-        self.catalog.commit(
-            merged_tt, "term_totals", "insert/term_totals_delta",
-            sort_within_by=["context", "term_lc"],
-        )
+        for name, merged in (
+            ("context_stats", merged_cs),
+            ("term_stats", merged_ts),
+            ("term_totals", merged_tt),
+        ):
+            commit_stats(self.catalog, name, f"insert/{name}_delta", merged)
         self._invalidate()
 
     def refresh_stats(self) -> None:
@@ -1111,19 +1102,11 @@ class HuntEngine:
 
     def _refresh_stats(self) -> None:
         self._invalidate()
-        p = self._postings()
-        self.catalog.commit(context_stats(p), "context_stats", "refresh/context_stats")
-        self.catalog.commit(
-            term_stats(p), "term_stats", "refresh/term_stats",
-            sort_within_by=["context", "term_lc"],
-        )
-        # p is tombstone-filtered, so the refreshed dictionary is exact
-        # for the live doc set — the completion fast path stays open
-        # across the mutation lifecycle without re-counting tombstones
-        self.catalog.commit(
-            term_totals(p), "term_totals", "refresh/term_totals",
-            sort_within_by=["context", "term_lc"],
-        )
+        # the postings are tombstone-filtered, so the refreshed tables
+        # (term_totals too) are exact for the live doc set — the
+        # completion fast path stays open across the mutation lifecycle
+        # without re-counting tombstones
+        commit_all_stats(self.catalog, self._postings(), "refresh")
         self._invalidate()
 
     @_mutating
@@ -1133,8 +1116,6 @@ class HuntEngine:
         and rebuild the blocks artifact — once tombstones are consumed
         the WAND gate reopens, so blocks must reflect the compacted
         postings (doc set AND baked df/idf)."""
-        from hunt_spark.operators.build import build_blocks
-
         p = self._postings()
         self.catalog.commit(
             p, "postings", "compact/postings",
@@ -1147,28 +1128,9 @@ class HuntEngine:
         self.catalog.commit(empty, "tombstones", "compact/tombstones")
         self._invalidate()
         p2 = self.catalog.read(self.spark, "postings")
-        self.catalog.commit(context_stats(p2), "context_stats", "compact/context_stats")
-        self.catalog.commit(
-            term_stats(p2), "term_stats", "compact/term_stats",
-            sort_within_by=["context", "term_lc"],
-        )
-        self.catalog.commit(
-            term_totals(p2), "term_totals", "compact/term_totals",
-            sort_within_by=["context", "term_lc"],
-        )
+        commit_all_stats(self.catalog, p2, "compact")
         if self.cfg.build_blocks:
-            # same fold-in as build_index: the stats inputs are in-job
-            # aggregations over the compacted postings (identical
-            # expressions to the commits above), not re-scans of the
-            # just-committed stats tables
-            blocks = build_blocks(
-                self.spark, p2, term_stats(p2), context_stats(p2), self.cfg,
-            )
-            self.catalog.commit(
-                blocks, "blocks", "compact/blocks",
-                partition_by=["context", "shard"],
-                sort_within_by=["term_lc", "block_id"],
-            )
+            commit_blocks(self.spark, self.catalog, p2, self.cfg, "compact/blocks")
         self._invalidate()
 
     # ------------------------------------------------------------------
@@ -1221,7 +1183,6 @@ class HuntEngine:
             "n_shards": self.cfg.n_shards,
             "block_size": self.cfg.block_size,
             "build_blocks": self.cfg.build_blocks,
-            "build_term_dict": self.cfg.build_term_dict,
         }
 
     @_mutating
@@ -1244,7 +1205,7 @@ class HuntEngine:
             # the wrong shard and silently returns empty/wrong results.
             with open(meta_path) as f:
                 meta = _json.load(f)
-            for k in ("n_shards", "block_size", "build_blocks", "build_term_dict"):
+            for k in self._layout_meta():
                 if k in meta:
                     setattr(self.cfg, k, meta[k])
         else:

@@ -23,9 +23,10 @@ Stages (each committed as a catalog snapshot; resumable):
    sorted within files by (term_lc, doc_id) => parquet min/max row-group
    pruning makes term lookups near-index-speed; a salt key spreads
    hot-term shards across writer tasks (stopword skew).
-3. ``stats``     — context_stats (context, n_docs, avg_dl) +
-   term_stats (context, term_lc, df, cdf, max_tf); broadcast to the
-   scorer. df = docs containing the term case-insensitively.
+3. ``stats``     — the ``STATS_TABLES``: context_stats (context, n_docs,
+   avg_dl), term_stats (context, term_lc, df, max_tf) broadcast to the
+   scorer, and term_totals (context, term, term_lc, sum_tf) for
+   completion. df = docs containing the term case-insensitively.
 4. ``blocks``    — grouped compressed artifact: postings split into
    doc_id-range blocks of <= block_size entries per (context, term_lc),
    each block delta+varbyte packed (doc ids) with a block-max BM25
@@ -65,7 +66,6 @@ class BuildConfig:
     # normalize_context_col, query side via CONTEXT_NORMS_PY)
     context_types: dict[str, str] = field(default_factory=dict)
     build_blocks: bool = True
-    build_term_dict: bool = True  # front-coded term dictionary artifact
     # context columns are raw html binary; a vectorized Arrow UDF
     # extracts the text before the JVM tokenizer
     extract_html: bool = False
@@ -415,6 +415,36 @@ def term_totals(postings: DataFrame) -> DataFrame:
     )
 
 
+# The derived stats tables, declared once: name -> (derivation from
+# postings, sort_within_by of the commit). build_index commits one stage
+# per entry; HuntEngine's refresh and compact commit the same entries
+# over the live postings, and the incremental insert merge commits its
+# merged frames through commit_stats too. term_stats/term_totals are
+# sorted by term_lc so the completion path's startswith predicate
+# prunes via parquet row-group min/max — no hive partitioning; a prefix
+# never maps to one hash shard.
+STATS_TABLES = {
+    "context_stats": (context_stats, None),
+    "term_stats": (term_stats, ["context", "term_lc"]),
+    "term_totals": (term_totals, ["context", "term_lc"]),
+}
+
+
+def commit_stats(
+    catalog: IndexCatalog, name: str, key: str, frame: DataFrame
+) -> dict:
+    """Commit ``frame`` as the stats table ``name`` in its declared
+    layout; returns the manifest entry."""
+    return catalog.commit(frame, name, key, sort_within_by=STATS_TABLES[name][1])
+
+
+def commit_all_stats(catalog: IndexCatalog, postings: DataFrame, prefix: str) -> None:
+    """Derive and commit every stats table from ``postings`` under the
+    stage keys ``{prefix}/{name}``."""
+    for name, (derive, _sort) in STATS_TABLES.items():
+        commit_stats(catalog, name, f"{prefix}/{name}", derive(postings))
+
+
 def idf_col(df_col: Column, n_docs: Column) -> Column:
     """BM25 idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (SURVEY.md §2.6 R8)."""
     return F.log(F.lit(1.0) + (n_docs - df_col + F.lit(0.5)) / (df_col + F.lit(0.5)))
@@ -679,6 +709,24 @@ def build_blocks(
     )
 
 
+def commit_blocks(
+    spark: SparkSession, catalog: IndexCatalog, postings: DataFrame,
+    cfg: BuildConfig, key: str,
+) -> dict:
+    """Build the blocks artifact from ``postings`` and commit it in the
+    (context, shard) layout the WAND reader prunes by. The stats inputs
+    are in-job aggregations with the same expressions as the committed
+    stats tables, so the artifact is byte-identical either way."""
+    blocks = build_blocks(
+        spark, postings, term_stats(postings), context_stats(postings), cfg
+    )
+    return catalog.commit(
+        blocks, "blocks", key,
+        partition_by=["context", "shard"],
+        sort_within_by=["term_lc", "block_id"],
+    )
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -792,20 +840,17 @@ def build_index(
     #     term_totals 2.5x of ideal 4x vs postings 2.8x);
     #   * barriers waste the tail of every stage — a dependency graph
     #     lets doc_meta/schema (pure-JVM) run inside the postings
-    #     stage's ramp-up, and term_dict start as soon as term_stats
-    #     commits instead of waiting for term_totals too.
+    #     stage's ramp-up, and the stats and blocks stages start as
+    #     soon as postings commits, each without waiting for the others.
     # Stage names stay distinct, commits append under the manifest
     # lock, and the resume contract is unchanged (each thread goes
     # through stage()).
     import threading
 
     errs: list[BaseException] = []
-    names = ["doc_meta", "schema", "postings",
-             "context_stats", "term_stats", "term_totals"]
+    names = ["doc_meta", "schema", "postings", *STATS_TABLES]
     if cfg.build_blocks:
         names.append("blocks")
-    if cfg.build_term_dict:
-        names.append("term_dict")
     done_ev = {nm: threading.Event() for nm in names}
 
     def _node(name: str, deps: list[str], fn) -> threading.Thread:
@@ -853,9 +898,6 @@ def build_index(
     def _postings_r() -> DataFrame:
         return catalog.read(spark, "postings")
 
-    # term_stats/term_totals sorted by term_lc so the completion path's
-    # startswith predicate prunes via parquet row-group min/max — no
-    # hive partitioning; a prefix never maps to one hash shard.
     threads = [
         _node(
             "doc_meta",
@@ -886,67 +928,29 @@ def build_index(
                 extra_meta={"n_shards": cfg.n_shards},
             ),
         ),
-        _node(
-            "context_stats",
-            ["postings"],
-            lambda key: catalog.commit(
-                context_stats(_postings_r()), "context_stats", key
-            ),
-        ),
-        _node(
-            "term_stats",
-            ["postings"],
-            lambda key: catalog.commit(
-                term_stats(_postings_r()), "term_stats", key,
-                partition_by=None, sort_within_by=["context", "term_lc"],
-            ),
-        ),
-        _node(
-            "term_totals",
-            ["postings"],
-            lambda key: catalog.commit(
-                term_totals(_postings_r()), "term_totals", key,
-                partition_by=None, sort_within_by=["context", "term_lc"],
-            ),
+        *(
+            _node(
+                name, ["postings"],
+                lambda key, name=name, derive=derive: commit_stats(
+                    catalog, name, key, derive(_postings_r())
+                ),
+            )
+            for name, (derive, _sort) in STATS_TABLES.items()
         ),
     ]
     if cfg.build_blocks:
-
-        def _commit_blocks(key: str) -> dict:
-            # stats are computed IN-JOB from the committed postings
-            # rather than awaited as committed stages: the two commit
-            # boundaries (write + manifest + re-scan, each a core-count-
-            # invariant constant) sat on the build's critical path
-            # (postings -> term_stats -> blocks) and cost the 4N leg of
-            # the scaling ladder relatively more than the N leg. The
-            # aggregations themselves are cheap, fully parallel, and
-            # identical expressions to the committed stages (term_stats/
-            # context_stats run concurrently for the query path); the
-            # blocks artifact is byte-identical either way.
-            p = _postings_r()
-            blocks = build_blocks(spark, p, term_stats(p), context_stats(p), cfg)
-            return catalog.commit(
-                blocks, "blocks", key,
-                partition_by=["context", "shard"],
-                sort_within_by=["term_lc", "block_id"],
+        # the blocks' stats inputs are computed in-job from the
+        # committed postings rather than awaited as committed stages:
+        # the two commit boundaries (write + manifest + re-scan, each a
+        # core-count-invariant constant) sat on the build's critical
+        # path (postings -> term_stats -> blocks) and cost the 4N leg
+        # of the scaling ladder relatively more than the N leg
+        threads.append(
+            _node(
+                "blocks", ["postings"],
+                lambda key: commit_blocks(spark, catalog, _postings_r(), cfg, key),
             )
-
-        threads.append(_node("blocks", ["postings"], _commit_blocks))
-    if cfg.build_term_dict:
-
-        def _commit_term_dict(key: str) -> dict:
-            from hunt_spark.functions.frontcode import build_term_dict
-
-            tdict = build_term_dict(
-                catalog.read(spark, "term_stats"), cfg.n_shards
-            )
-            return catalog.commit(
-                tdict, "term_dict", key,
-                partition_by=["context", "shard"],
-                sort_within_by=["first_term"],
-            )
-
-        threads.append(_node("term_dict", ["term_stats"], _commit_term_dict))
+        )
 
     warm_t.start()
     for t in threads:

@@ -150,16 +150,19 @@ def _decode(
     blocks: DataFrame,
     legs: list[WandLeg],
     keep: dict[tuple[str, str], list[tuple[int, int]]],
-    n_docs: dict[str, float],
+    idf: dict[tuple[str, str], float],
     avg_dl: dict[str, float],
 ) -> DataFrame:
     """Scan the kept ((context, term_lc) -> block_id set) blocks; emit per
     (context, doc_id, term_lc) the similarity-weighted boosted BM25
     contribution (max over case variants — mirrors compiler._scan).
 
-    Scores are recomputed from the stored (tf, dl, df) with the same
-    IEEE double expression shape as idf_col/tf_norm_col, so the pruned
-    path reproduces the full plan's arithmetic."""
+    Scores are bit-identical to the full plan's: ``idf`` per (context,
+    term_lc) is computed once with the JVM's StrictMath.log (Spark's
+    ``ln``; numpy's log differs in the last bit for some arguments), the
+    tf norm repeats tf_norm_col's IEEE double expression, and the
+    factors multiply in the full plan's order, (sim * idf) * tf_norm,
+    with the boost last."""
     from hunt_spark.operators.build import BM25_B, BM25_K1
 
     conds = None
@@ -174,40 +177,37 @@ def _decode(
         c = (F.col("context") == cx) & (F.col("term_lc") == t) & ic
         conds = c if conds is None else (conds | c)
     sel = blocks.filter(conds).select(
-        "context", "term_lc", "df", "doc_ids_vb", "variants", "tfs", "dls"
+        "context", "term_lc", "doc_ids_vb", "variants", "tfs", "dls"
     )
     by_lc = {x.term_lc: x for x in legs}
 
     def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             ctx_o, doc_o, lc_o, sc_o = [], [], [], []
-            for ctx, lc, df_v, vb, variants, tfs, dls in zip(
-                b["context"], b["term_lc"], b["df"], b["doc_ids_vb"],
+            for ctx, lc, vb, variants, tfs, dls in zip(
+                b["context"], b["term_lc"], b["doc_ids_vb"],
                 b["variants"], b["tfs"], b["dls"],
             ):
                 leg = by_lc[lc]
                 ids = delta_varbyte_decode(bytes(vb))
                 tf = np.asarray(tfs, dtype=np.float64)
                 dl = np.asarray(dls, dtype=np.float64)
-                n_d, a_dl = n_docs[ctx], avg_dl[ctx]
-                idf = np.log(1.0 + (n_d - float(df_v) + 0.5) / (float(df_v) + 0.5))
-                s = idf * (
-                    (tf * (BM25_K1 + 1.0))
-                    / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / a_dl))
-                )
                 # resolve original-case variants (null == lowercase term)
                 varr = np.asarray(variants, dtype=object)
                 varr[pd.isna(varr)] = lc
                 if leg.op == "case":
                     m = varr == leg.word
-                    ids, s = ids[m], s[m]  # sim == 1.0 on exact variant
-                else:
-                    # Keys.hs similar': equal -> 1.0, same length (always
-                    # true within a term_lc group) -> 0.75
-                    s = s * np.where(varr == leg.word, 1.0, 0.75)
+                    ids, tf, dl, varr = ids[m], tf[m], dl[m], varr[m]
                 if len(ids) == 0:
                     continue
-                s = s * leg.boost
+                # Keys.hs similar': equal -> 1.0, same length (always
+                # true within a term_lc group) -> 0.75
+                sim = np.where(varr == leg.word, 1.0, 0.75)
+                a_dl = avg_dl[ctx]
+                tfn = (tf * (BM25_K1 + 1.0)) / (
+                    tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / a_dl)
+                )
+                s = sim * idf[(ctx, lc)] * tfn * leg.boost
                 ctx_o.extend([ctx] * len(ids))
                 doc_o.append(ids)
                 lc_o.extend([lc] * len(ids))
@@ -281,6 +281,13 @@ class WandExecutor:
         self.max_stats_rows = max_stats_rows
         self.last_stats: dict | None = None  # pruning observability
 
+    def _idf(self, cx: str, df: int) -> float:
+        """idf_col in Python: the same double arithmetic, and the JVM's
+        StrictMath.log — the function behind Spark's ``ln`` — over py4j,
+        with no Spark job."""
+        x = 1.0 + (self.n_docs[cx] - float(df) + 0.5) / (float(df) + 0.5)
+        return self.spark.sparkContext._jvm.java.lang.StrictMath.log(x)
+
     def _shards_for(self, terms: list[str]) -> list[int]:
         # driver-side xxhash64 twin (functions/xxh64.py) — no Spark job
         # for a 2-3 element hash (VERDICT r1 "What's wrong" #4)
@@ -300,7 +307,7 @@ class WandExecutor:
             "context", "term_lc",
             F.col("block_id").alias("bid_lo"),
             F.col("block_id").alias("bid_hi"),
-            "n_blocks", "max_bm25", "n_postings",
+            "n_blocks", "max_bm25", "n_postings", "df",
         )
         rows = sel.limit(self.max_stats_rows + 1).collect()
         if len(rows) <= self.max_stats_rows:
@@ -318,6 +325,7 @@ class WandExecutor:
                 F.first("n_blocks").alias("n_blocks"),
                 F.max("max_bm25").alias("max_bm25"),
                 F.sum("n_postings").alias("n_postings"),
+                F.max("df").alias("df"),
             )
             .drop("_g")
             .collect()
@@ -348,6 +356,10 @@ class WandExecutor:
         for r in stats:
             per_ct.setdefault((r["context"], r["term_lc"]), []).append(r.asDict())
         tb = {key: _TermBlocks(rows) for key, rows in per_ct.items()}
+        idf = {
+            (cx, t): self._idf(cx, rows[0]["df"])
+            for (cx, t), rows in per_ct.items()
+        }
 
         keep: dict[tuple[str, str], list[tuple[int, int]]] = {}
         n_total = n_kept = n_seed_jobs = 0
@@ -412,7 +424,7 @@ class WandExecutor:
                     part = _aggregate(
                         _decode(
                             bl.filter(F.col("context") == cx), legs, seed_keep,
-                            self.n_docs, self.avg_dl,
+                            idf, self.avg_dl,
                         ),
                         "or",
                         len(legs),
@@ -442,5 +454,5 @@ class WandExecutor:
             return empty
         keep = {key: _coalesce(v) for key, v in keep.items()}
         return _aggregate(
-            _decode(bl, legs, keep, self.n_docs, self.avg_dl), op, len(legs)
+            _decode(bl, legs, keep, idf, self.avg_dl), op, len(legs)
         )

@@ -193,7 +193,7 @@ def test_failed_stage_poisons_dependents(spark, docs, tmp_path_factory):
     committed = {e["table"] for e in cat.snapshots()}
     # postings never committed, so nothing downstream of it may have
     for t in ("postings", "term_stats", "term_totals", "context_stats",
-              "blocks", "term_dict"):
+              "blocks"):
         assert t not in committed, committed
     # the independent JVM-only head stages may or may not have landed
     # (they race the failure); a rerun under the same build id must

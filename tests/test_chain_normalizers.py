@@ -60,7 +60,7 @@ def upper_engine(spark, tmp_path_factory):
         spark, str(tmp_path_factory.mktemp("ix_chain")),
         BuildConfig(n_shards=2, salt_buckets=1,
                     context_normalizers={"body": ["UpperCase"]},
-                    build_blocks=False, build_term_dict=False),
+                    build_blocks=False),
     )
     eng.build(
         spark.createDataFrame(
@@ -109,8 +109,7 @@ def test_chain_persists_across_reopen(upper_engine, spark):
 def test_insert_context_normalizers_verb(spark, tmp_path_factory):
     eng = HuntEngine(
         spark, str(tmp_path_factory.mktemp("ix_chain_verb")),
-        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False,
-                    build_term_dict=False),
+        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False),
     )
     eng.insert_context("code", normalizers=["ZeroFill"])
     assert eng._schema()["code"][4] == ("ZeroFill",)

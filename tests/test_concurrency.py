@@ -20,8 +20,7 @@ def eng(spark, tmp_path_factory):
     e = HuntEngine(
         spark,
         str(tmp_path_factory.mktemp("conc_idx")),
-        BuildConfig(n_shards=4, salt_buckets=2, build_blocks=False,
-                    build_term_dict=False),
+        BuildConfig(n_shards=4, salt_buckets=2, build_blocks=False),
     )
     docs = spark.createDataFrame(corpus_pandas(40), schema=CORPUS_SCHEMA)
     e.build(docs, {"text": F.col("text")}, build_id="c")

@@ -28,7 +28,7 @@ def eng(spark, tmp_path_factory):
         BuildConfig(
             n_shards=2, salt_buckets=1,
             context_defaults={"hidden": False},
-            build_blocks=False, build_term_dict=False,
+            build_blocks=False,
         ),
     )
     docs = spark.createDataFrame(
@@ -98,8 +98,7 @@ def test_insert_context_default_flag_http(spark, tmp_path_factory):
     # {"default": false}, then /status/schema reports it
     e = HuntEngine(
         spark, str(tmp_path_factory.mktemp("ix_cxdefault_http")),
-        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False,
-                    build_term_dict=False),
+        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False),
     )
     srv = HuntServer(e).start()
     try:

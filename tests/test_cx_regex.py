@@ -91,7 +91,7 @@ def test_date_context_regex_scan_engine(spark, tmp_path_factory):
             n_shards=4, salt_buckets=2,
             context_types={"when": "date"},
             context_regexes={"when": DATE_RX},
-            build_blocks=False, build_term_dict=False,
+            build_blocks=False,
         ),
     )
     eng.build(docs, {"when": F.col("when")}, build_id="rx")
@@ -113,7 +113,7 @@ def test_date_context_regex_scan_engine(spark, tmp_path_factory):
         BuildConfig(
             n_shards=4, salt_buckets=2,
             context_types={"when": "date"},
-            build_blocks=False, build_term_dict=False,
+            build_blocks=False,
         ),
     )
     plain.build(docs, {"when": F.col("when")}, build_id="plain")
@@ -169,8 +169,7 @@ def test_insert_context_regex_persists_across_reopen(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("ix_verb_rx"))
     eng = HuntEngine(
         spark, root,
-        BuildConfig(n_shards=4, salt_buckets=2, build_blocks=False,
-                    build_term_dict=False),
+        BuildConfig(n_shards=4, salt_buckets=2, build_blocks=False),
     )
     eng.build(
         spark.createDataFrame(

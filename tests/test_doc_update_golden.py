@@ -140,8 +140,7 @@ def srv(spark, tmp_path_factory):
     eng = HuntEngine(
         spark,
         str(tmp_path_factory.mktemp("golden_ix")),
-        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False,
-                    build_term_dict=False),
+        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False),
         scoring="hunt",  # the reference's native scorer
     )
     s = HuntServer(eng).start()

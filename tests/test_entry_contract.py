@@ -95,22 +95,20 @@ def test_gate_order_is_pinned():
 
 
 def test_oracle_sql_tolerates_rows_only_gates(monkeypatch):
-    real = entrymod.queries()
+    # a gate listed in the order but without oracle SQL is skipped
     monkeypatch.setattr(
-        entrymod, "queries", lambda: {**real, "rows_only_probe": None}
+        entrymod, "GATE_ORDER", ["rows_only_probe", *entrymod.GATE_ORDER]
     )
     assert list(entrymod.oracle_sql()) == GATE_ORDER
 
 
 def test_reorder_gates_rejects_unknown_or_overlapping_names(monkeypatch):
-    gates = {k: None for k in GATE_ORDER}
-    assert list(entrymod._reorder_gates(gates)) == GATE_ORDER
-    renamed = {("x_" + k if k == "emb_ann_ivf" else k): v
-               for k, v in gates.items()}
+    # GATE_ORDER must name each queries() gate exactly once: a renamed
+    # gate or a listed-twice name fails loudly
+    renamed = [("x_" + k if k == "emb_ann_ivf" else k) for k in GATE_ORDER]
+    monkeypatch.setattr(entrymod, "GATE_ORDER", renamed)
     with pytest.raises(AssertionError, match="emb_ann_ivf"):
-        entrymod._reorder_gates(renamed)
-    monkeypatch.setattr(
-        entrymod, "_GATE_RESERVE", entrymod._GATE_RESERVE + ["emb_ann_lsh"]
-    )
-    with pytest.raises(AssertionError, match="overlap"):
-        entrymod._reorder_gates(gates)
+        entrymod.queries()
+    monkeypatch.setattr(entrymod, "GATE_ORDER", GATE_ORDER + ["emb_ann_lsh"])
+    with pytest.raises(AssertionError, match="once"):
+        entrymod.queries()

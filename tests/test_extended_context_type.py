@@ -79,8 +79,7 @@ def realint_registered():
 def _demo_engine(spark, root) -> HuntEngine:
     eng = HuntEngine(
         spark, root,
-        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False,
-                    build_term_dict=False),
+        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False),
     )
     # the demo's InsertContext "number" def { cxType = cRealInt }
     eng.insert_context("number", ctype="realInt")

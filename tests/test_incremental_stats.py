@@ -61,7 +61,7 @@ def _assert_stats_equal_full_recompute(eng):
 
 
 def test_incremental_insert_stats_bitwise_exact(spark, eng):
-    assert eng._stats_fresh()
+    assert eng._derived_fresh()
     eng.insert(
         _batch(spark, 100, 40), {"text": F.col("text")}
     )  # takes the incremental path (fresh stats + disjoint URIs)
@@ -92,12 +92,12 @@ def test_stale_stats_fall_back_to_full(spark, eng):
     eng.insert(
         _batch(spark, 100, 10), {"text": F.col("text")}, refresh_stats=False
     )
-    assert not eng._stats_fresh()
+    assert not eng._derived_fresh()
     # …so the next stats-refreshing insert must use the full path and
     # land exact anyway
     eng.insert(_batch(spark, 110, 10), {"text": F.col("text")})
     _assert_stats_equal_full_recompute(eng)
-    assert eng._stats_fresh()
+    assert eng._derived_fresh()
 
 
 def test_incremental_stats_serve_identical_bm25(spark, eng):
@@ -132,7 +132,7 @@ def test_unvalidated_insert_takes_full_path_and_stays_exact(
         eng, "_refresh_stats",
         lambda: (called.__setitem__("full", called["full"] + 1), orig_full()),
     )
-    assert eng._stats_fresh()
+    assert eng._derived_fresh()
     # re-insert docs 0..9 — already indexed by the fixture's build
     eng.insert(_batch(spark, 0, 10), {"text": F.col("text")},
                validate_uris=False)

@@ -38,7 +38,6 @@ def test_index_lifecycle_per_context_type(spark, tmp_path_factory, ctype, key, f
         n_shards=4,
         salt_buckets=2,
         build_blocks=False,
-        build_term_dict=False,
         context_types={} if ctype == "text" else {"cx": ctype},
     )
     eng = HuntEngine(spark, str(tmp_path_factory.mktemp(f"dflt_{ctype}")), cfg)

@@ -61,8 +61,7 @@ def qphrase(s, op="case"):
 def srv(spark, tmp_path):
     eng = HuntEngine(
         spark, str(tmp_path / "ix"),
-        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False,
-                    build_term_dict=False),
+        BuildConfig(n_shards=2, salt_buckets=1, build_blocks=False),
     )
     s = HuntServer(eng).start()
     yield s

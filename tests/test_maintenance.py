@@ -4,6 +4,7 @@ Interpreter.hs:488-504 Update; :585-593 mkSelect)."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -266,8 +267,13 @@ def test_delete_of_unknown_uri_is_noop(spark, eng):
     would block its FIRST insert behind the pending-tombstone guard."""
     url = "https://example.org/en/never-indexed"
     before = eng.doc_meta().count()
+    commits = len(eng.catalog.snapshots())
     eng.delete_docs([url])
+    eng.delete_by_query("'nosuchtermxyz'")
     assert eng.doc_meta().count() == before
+    # nothing matched, so nothing is committed (no empty tombstones
+    # delta, no stats refresh)
+    assert len(eng.catalog.snapshots()) == commits
     eng.insert(  # first insert must not be blocked
         spark.createDataFrame([(url, "fresh doc")], "url string, text string"),
         {"text": F.col("text")},
@@ -317,3 +323,45 @@ def test_update_does_not_resurrect_deleted_docs(spark, eng):
     )
     assert {r["url"] for r in eng.search("'lazarus'", k=5).collect()} == {dead}
     assert eng.doc_meta().filter(F.col("url") == dead).count() == 1
+
+
+def test_mutated_then_compacted_derived_tables_equal_fresh_build(
+    spark, tmp_path_factory
+):
+    """build, refresh, incremental insert and compact derive the stats
+    and blocks tables through one declaration: after an insert, a delete
+    and compact(), every derived table equals row for row what a fresh
+    build of the surviving docs commits."""
+    cfg = dict(n_shards=2, salt_buckets=1, block_size=8)
+    base, batch = corpus_pandas(60), corpus_pandas(10, offset=60)
+    gone = [base.url[3], base.url[17], batch.url[4]]
+    e = HuntEngine(spark, str(tmp_path_factory.mktemp("derived_a")),
+                   BuildConfig(**cfg))
+    e.build(spark.createDataFrame(base, schema=CORPUS_SCHEMA),
+            {"text": F.col("text")}, build_id="a")
+    e.insert(spark.createDataFrame(batch, schema=CORPUS_SCHEMA),
+             {"text": F.col("text")})
+    e.delete_docs(gone)
+    e.compact()
+
+    live = pd.concat([base, batch], ignore_index=True)
+    live = live[~live.url.isin(gone)]
+    fresh = HuntEngine(spark, str(tmp_path_factory.mktemp("derived_b")),
+                       BuildConfig(**cfg))
+    fresh.build(spark.createDataFrame(live, schema=CORPUS_SCHEMA),
+                {"text": F.col("text")}, build_id="b")
+
+    keys = {
+        "context_stats": ["context"],
+        "term_stats": ["context", "term_lc"],
+        "term_totals": ["context", "term"],
+        "blocks": ["context", "term_lc", "block_id"],
+    }
+
+    def rows(eng, table, key):
+        out = [r.asDict() for r in eng.catalog.read(spark, table).collect()]
+        return sorted(out, key=lambda d: [d[k] for k in key])
+
+    for table, key in keys.items():
+        want = rows(fresh, table, key)
+        assert want and rows(e, table, key) == want, table

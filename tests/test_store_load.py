@@ -47,6 +47,13 @@ def test_export_preserves_commit_order_and_wand(built, spark, tmp_path_factory):
 def test_load_restores_layout_config(built, spark, tmp_path_factory):
     export = str(tmp_path_factory.mktemp("sl_export2") / "ix")
     built.store_index(export)
+    # exports from builds that also wrote a front-coded term_dict carry
+    # a build_term_dict key: they still load, and the key is ignored
+    meta_path = os.path.join(export, "_index_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    with open(meta_path, "w") as f:
+        json.dump({**meta, "build_term_dict": True}, f)
     before = [r["url"] for r in built.search("!brain", k=5).collect()]
     # a fresh engine configured with a DIFFERENT shard count must pick
     # up the exported layout (exact-word lookups prune by
@@ -59,6 +66,7 @@ def test_load_restores_layout_config(built, spark, tmp_path_factory):
     )
     other.load_index(export)
     assert other.cfg.n_shards == 4
+    assert not hasattr(other.cfg, "build_term_dict")
     got = [r["url"] for r in other.search("!brain", k=5).collect()]
     assert got == before and got
 

@@ -29,7 +29,7 @@ def small_engine(spark, tmp_path_factory):
         BuildConfig(
             n_shards=2, salt_buckets=1,
             context_types={"small": "text-small"},
-            build_blocks=False, build_term_dict=False,
+            build_blocks=False,
         ),
     )
     eng.build(df, {"full": F.col("full"), "small": F.col("small")},

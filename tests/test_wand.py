@@ -173,3 +173,39 @@ def test_or_seed_job_folded_when_upside_small(wand_engine):
     # ...while a genuinely prunable query (tiny k, hot term) still seeds
     eng.search("'the' OR 'brain'", k=1, use_wand=True).collect()
     assert eng.wand().last_stats["seed_jobs"] == 1
+
+
+def test_wand_scores_bit_identical_to_full_plan(spark, tmp_path_factory):
+    """Scores through WAND equal the full plan's with ==, not to 1e-9:
+    the decode takes idf from StrictMath.log (Spark's ``ln``) and
+    multiplies (sim * idf) * tf_norm like compiler._scan. At N = 150
+    numpy's log differs from StrictMath.log in the last bit for df = 9
+    and df = 20, and 'Zeta' is a case variant scored with sim = 0.75,
+    where (idf * tf_norm) * sim rounds differently for some docs."""
+    n, df_zeta, df_alpha = 150, 9, 20
+
+    def text(i):
+        words = ["filler"] * (1 + i % 5)
+        if i < df_zeta:
+            words += ["Zeta" if i % 3 == 0 else "zeta"] * (1 + i % 4)
+        if i % 7 == 0 and i < 7 * df_alpha:
+            words += ["alpha"] * (1 + i % 3)
+        return " ".join(words)
+
+    docs = spark.createDataFrame(
+        [(f"https://example.org/bits/{i:03d}", text(i)) for i in range(n)],
+        "url string, text string",
+    )
+    eng = HuntEngine(
+        spark, str(tmp_path_factory.mktemp("wand_bits")),
+        BuildConfig(n_shards=2, salt_buckets=1),
+    )
+    eng.build(docs, {"text": F.col("text")}, build_id="bits")
+    assert eng.wand() is not None
+    for q in ("'zeta'", "'zeta' OR 'alpha'", "'Zeta'^2 'alpha'"):
+        full = eng.search(q, k=n, use_wand=False).collect()
+        pruned = eng.search(q, k=n, use_wand=True).collect()
+        assert full, q
+        assert [(r["doc_id"], r["score"]) for r in pruned] == [
+            (r["doc_id"], r["score"]) for r in full
+        ], q
