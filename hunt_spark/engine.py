@@ -10,7 +10,8 @@ from __future__ import annotations
 import functools
 import threading
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from hunt_spark.operators.build import (
@@ -76,6 +77,13 @@ class HuntEngine:
         # interleave manifest appends. Queries stay lock-free —
         # snapshot reads are consistent under append-only commits.
         self._mutate_lock = threading.RLock()
+        # Every mutation bumps the generation (_invalidate). State derived
+        # lazily from the catalog (compiler, doc_meta, WAND gate, plans,
+        # counts) is kept only if the generation has not moved since the
+        # request that derived it started: else a put racing an insert
+        # would serve the pre-insert state until the next mutation.
+        self._gen = 0
+        self._cache_lock = threading.Lock()
         self._compiler: QueryCompiler | None = None
         self._doc_meta: DataFrame | None = None
         self._wand: WandExecutor | None = None
@@ -93,6 +101,11 @@ class HuntEngine:
         # complete result, ApiDocument.hs:60,72-81) — one extra job per
         # distinct query, amortized across repeats like the plan cache
         self._count_cache: dict[str, int] = {}
+        # per query text: the parsed AST, and the doc-level scored frame
+        # collapse_contexts(eval(ast)) that the top-k plan and the count
+        # share, so a query is compiled once
+        self._ast_cache: dict[str, object] = {}
+        self._frame_cache: dict[str, DataFrame] = {}
 
     # ------------------------------------------------------------------
     # build / load
@@ -111,12 +124,24 @@ class HuntEngine:
         return entries
 
     def _invalidate(self) -> None:
-        self._compiler = None
-        self._doc_meta = None
-        self._wand = None
-        self._term_totals = None
-        self._plan_cache.clear()
-        self._count_cache.clear()
+        with self._cache_lock:
+            self._gen += 1
+            self._compiler = None
+            self._doc_meta = None
+            self._wand = None
+            self._wand_unavailable = None
+            self._term_totals = None
+            for cache in (self._plan_cache, self._count_cache,
+                          self._ast_cache, self._frame_cache):
+                cache.clear()
+
+    def _remember(self, gen: int, **attrs) -> None:
+        """Keep lazily derived state unless a mutation invalidated the
+        engine since generation ``gen``."""
+        with self._cache_lock:
+            if gen == self._gen:
+                for name, value in attrs.items():
+                    setattr(self, name, value)
 
     def _tombstones(self) -> DataFrame | None:
         try:
@@ -148,14 +173,16 @@ class HuntEngine:
         return self
 
     def doc_meta(self) -> DataFrame:
-        if self._doc_meta is None:
+        m = self._doc_meta
+        if m is None:
+            gen = self._gen
             m = self.catalog.read(self.spark, "doc_meta")
             t = self._tombstones()
             if t is not None:
                 # size-adaptive anti-join (AQE), same as _postings()
                 m = m.join(t.select("doc_id"), "doc_id", "left_anti")
-            self._doc_meta = m
-        return self._doc_meta
+            self._remember(gen, _doc_meta=m)
+        return m
 
     def _schema(
         self,
@@ -220,7 +247,9 @@ class HuntEngine:
         return sch
 
     def compiler(self) -> QueryCompiler:
-        if self._compiler is None:
+        comp = self._compiler
+        if comp is None:
+            gen = self._gen
             sch = self._sync_cfg_from_schema()
             cstats = self.catalog.read(self.spark, "context_stats").collect()
             stats = IndexStats(
@@ -257,7 +286,7 @@ class HuntEngine:
                 chain = self.cfg.context_normalizers.get(cx)
                 if tnorm is not None or chain:
                     norms[cx] = _q_norm(chain, tnorm)
-            self._compiler = QueryCompiler(
+            comp = QueryCompiler(
                 self._postings(),
                 self.catalog.read(self.spark, "term_stats"),
                 stats,
@@ -279,7 +308,8 @@ class HuntEngine:
                 scoring=self.scoring,
                 context_types=self.cfg.context_types,
             )
-        return self._compiler
+            self._remember(gen, _compiler=comp)
+        return comp
 
     def wand(self) -> WandExecutor | None:
         """Block-max executor over the compressed blocks artifact.
@@ -289,48 +319,84 @@ class HuntEngine:
         ranking is a monotone transform of that sum: single context (or
         uniform context weights over one context), uniform doc weights,
         no tombstones postdating the blocks snapshot (baked-in idf would
-        be stale). Otherwise fall back to the full plan."""
-        if self._wand is None:
-            self._wand_unavailable = None
-            if self.scoring != "bm25":
-                self._wand_unavailable = "blocks bake BM25 contributions"
-                return None
-            t = self._tombstones()
-            if t is not None and t.limit(1).count() > 0:
-                self._wand_unavailable = "tombstones postdate the blocks snapshot"
-                return None
-            # blocks must postdate the newest postings mutation: insert/
-            # update commit fresh postings snapshots the blocks artifact
-            # doesn't reflect (tombstones are gated by the row check
-            # above, so a rebuild over pending deletes stays closed)
-            if not self._derived_fresh(["blocks"], deps=("postings",)):
-                self._wand_unavailable = "blocks artifact stale or missing"
-                return None
-            try:
-                blocks = self.catalog.read(self.spark, "blocks")
-            except FileNotFoundError:
-                self._wand_unavailable = "blocks artifact missing"
-                return None
-            if len(self.compiler().all_contexts) > 1:
-                self._wand_unavailable = "multi-context index"
-                return None
-            if self.doc_limit:
-                # per-context doc-set truncation (Hunt docLimit) runs
-                # inside the full plan's scans; WAND doesn't apply it,
-                # so auto-routing would flip result sets
-                self._wand_unavailable = "doc_limit configured"
-                return None
-            wrange = self.doc_meta().agg(
-                F.min("weight").alias("lo"), F.max("weight").alias("hi")
-            ).first()
-            if wrange["lo"] != wrange["hi"]:
-                self._wand_unavailable = "non-uniform doc weights"
-                return None
-            st = self.compiler().stats
-            self._wand = WandExecutor(
-                self.spark, blocks, self.cfg.n_shards, st.n_docs, st.avg_dl
-            )
+        be stale). Otherwise fall back to the full plan. The verdict,
+        open or closed, holds until the next mutation."""
+        if self._wand is None and self._wand_unavailable is None:
+            gen = self._gen
+            wx, why = self._open_wand()
+            self._remember(gen, _wand=wx, _wand_unavailable=why)
+            return wx
         return self._wand
+
+    def _open_wand(self) -> tuple[WandExecutor | None, str | None]:
+        """(executor, None) when every WAND condition holds, else
+        (None, the first one that fails)."""
+        if self.scoring != "bm25":
+            return None, "blocks bake BM25 contributions"
+        t = self._tombstones()
+        if t is not None and t.limit(1).count() > 0:
+            return None, "tombstones postdate the blocks snapshot"
+        # blocks must postdate the newest postings mutation: insert/
+        # update commit fresh postings snapshots the blocks artifact
+        # doesn't reflect (tombstones are gated by the row check
+        # above, so a rebuild over pending deletes stays closed)
+        if not self._derived_fresh(["blocks"], deps=("postings",)):
+            return None, "blocks artifact stale or missing"
+        try:
+            # one overwrite snapshot (commit_blocks)
+            snap = self.catalog.current_entries("blocks")[-1]
+        except FileNotFoundError:
+            return None, "blocks artifact missing"
+        if len(self.compiler().all_contexts) > 1:
+            return None, "multi-context index"
+        if self.compiler().context_norms:
+            # the full plan rewrites query words per context (typed key
+            # layouts, normalizer chains); WAND legs look up the word
+            return None, "context normalizes query words"
+        if self.doc_limit:
+            # per-context doc-set truncation (Hunt docLimit) runs
+            # inside the full plan's scans; WAND doesn't apply it,
+            # so auto-routing would flip result sets
+            return None, "doc_limit configured"
+        weight = self._uniform_doc_weight()
+        if weight is None:
+            return None, "non-uniform doc weights"
+        st = self.compiler().stats
+        # the distributed executor reads the pinned snapshot the driver
+        # route reads, when it first needs it
+        blocks = functools.partial(
+            self.catalog.read, self.spark, "blocks", snap["snapshot_id"]
+        )
+        return WandExecutor(
+            self.spark, blocks, self.cfg.n_shards, st.n_docs, st.avg_dl,
+            path=snap["path"], doc_weight=weight,
+        ), None
+
+    def _uniform_doc_weight(self) -> float | None:
+        """The weight every doc carries (1.0 for no docs), read from the
+        min/max statistics in the doc_meta files' parquet footers with
+        no Spark job; None when the weights differ or a row group has no
+        statistics. Tombstoned docs count: the WAND gate checks for
+        tombstones first."""
+        import glob
+        import os
+
+        import pyarrow.parquet as pq
+
+        lo = hi = None
+        for e in self.catalog.current_entries("doc_meta"):
+            for f in glob.glob(os.path.join(e["path"], "*.parquet")):
+                md = pq.read_metadata(f)
+                j = md.schema.names.index("weight")
+                for i in range(md.num_row_groups):
+                    if md.row_group(i).num_rows == 0:
+                        continue
+                    st = md.row_group(i).column(j).statistics
+                    if st is None or not st.has_min_max:
+                        return None
+                    lo = st.min if lo is None else min(lo, st.min)
+                    hi = st.max if hi is None else max(hi, st.max)
+        return 1.0 if lo is None else lo if lo == hi else None
 
     # ------------------------------------------------------------------
     # query surface
@@ -370,6 +436,138 @@ class HuntEngine:
             return QContext(q.contexts, self._resolve_fuzzy(q.query))
         return q
 
+    def _parsed(self, query):
+        """The query's AST, parsed once per query text."""
+        if not isinstance(query, str):
+            return self._ast(query)
+        ast = self._ast_cache.get(query)
+        if ast is None:
+            gen = self._gen
+            ast = self._ast(query)
+            self._cache_put(self._ast_cache, query, ast, gen)
+        return ast
+
+    def _scored(self, query, ast=None) -> DataFrame:
+        """The doc-level scored frame (doc_id, score) of the full plan,
+        collapse_contexts(eval(ast)): one row per matching doc, compiled
+        once per query text for both the top-k plan and the count."""
+        frame = self._frame_cache.get(query) if isinstance(query, str) else None
+        if frame is None:
+            gen = self._gen
+            c = self.compiler()
+            frame = c.collapse_contexts(
+                c.eval(ast if ast is not None else self._parsed(query))
+            )
+            if isinstance(query, str):
+                self._cache_put(self._frame_cache, query, frame, gen)
+        return frame
+
+    def search_page(
+        self, query, k: int = 10, offset: int = 0, fields: list[str] | None = None
+    ) -> tuple[list, int]:
+        """One /search request: (the rows search(query, k, offset,
+        fields) collects, search_count(query)).
+
+        A WAND-shaped query is answered on the driver with no Spark job
+        when the WAND gate is open, its terms' blocks hold at most
+        DRIVER_POSTINGS postings and doc_meta is small enough that Spark
+        would broadcast it into the join anyway (_driver_page). Any
+        other query runs the distributed plan, whose count reuses the
+        plan's compiled frame."""
+        page = self._driver_page(query, k, offset, fields or [])
+        if page is not None:
+            return page
+        rows = self.search(query, k=k, offset=offset, fields=fields).collect()
+        return rows, self.search_count(query)
+
+    def _driver_page(self, query, k: int, offset: int, fields: list[str]):
+        """search_page on the driver: WandExecutor.driver_scores gives
+        every matching doc's score; the context weight, then the doc
+        weight, multiply in as in collapse_contexts and _search_plan; the
+        docs scoring at least the (k+offset)-th score (ties included)
+        get their doc_meta row by a pyarrow doc_id filter, and sort by
+        (score DESC, url ASC). None when the route does not apply."""
+        shape = compile_wand(self._parsed(query))
+        if shape is None:
+            return None
+        wx = self.wand()
+        if wx is None:
+            return None
+        snaps = self.catalog.current_entries("doc_meta")
+        threshold = (
+            self.spark._jsparkSession.sessionState().conf()
+            .autoBroadcastJoinThreshold()
+        )
+        if sum(p["bytes"] for e in snaps for p in e["lineage"]) > threshold:
+            return None
+        c = self.compiler()
+        op, legs = shape
+        hits = wx.driver_scores(op, legs, c.default_contexts)
+        if hits is None:
+            return None
+        ids, raw = hits
+        total = len(ids)
+        # at most one context (the WAND gate)
+        cw = c.stats.context_weights.get(c.all_contexts[0], 1.0) if c.all_contexts else 1.0
+        scores = raw * cw * wx.doc_weight
+        n = k + offset
+        if n <= 0:
+            return [], total
+        if total > n:
+            # every doc tied with the n-th score stays: url breaks ties
+            keep = scores >= np.partition(scores, total - n)[total - n]
+            ids, scores = ids[keep], scores[keep]
+        names, meta = self._doc_meta_arrow(snaps, ids, fields)
+        if meta.num_rows < len(ids):
+            return None  # a posting without doc_meta: the join drops it
+        cols = {name: meta[name].to_pylist() for name in meta.column_names}
+        if "description" in cols:
+            cols["description"] = [
+                None if d is None else dict(d) for d in cols["description"]
+            ]
+        cols["score"] = scores[
+            np.searchsorted(ids, meta["doc_id"].to_numpy())
+        ].tolist()
+        extra = [f for f in fields if f not in ("doc_id", "url", "weight")]
+        for f in extra:
+            if f not in names:  # a description key
+                cols[f] = [None if d is None else d.get(f)
+                           for d in cols["description"]]
+        out = ["doc_id", "url", "score",
+               *(["weight"] if "weight" in fields else []), *extra]
+        order = sorted(range(meta.num_rows),
+                       key=lambda i: (-cols["score"][i], cols["url"][i]))
+        row = Row(*out)
+        return [row(*(cols[f][i] for f in out)) for i in order[offset:n]], total
+
+    @staticmethod
+    def _doc_meta_arrow(snaps: list[dict], ids, fields: list[str]):
+        """(doc_meta's column names, its rows for doc ids ``ids``) read
+        with pyarrow from the snapshot directories ``snaps``: doc_id,
+        url, weight, and what ``fields`` projects — a doc_meta column,
+        or else a description key (_search_plan's rule)."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        sets = [ds.dataset(e["path"], format="parquet") for e in snaps]
+        sets = [d for d in sets if "doc_id" in d.schema.names]
+        names = {n for d in sets for n in d.schema.names}
+        want = ["doc_id", "url", "weight"]
+        for f in fields:
+            if f in names:
+                want.append(f)
+            elif "description" in names:
+                want.append("description")
+            else:
+                raise KeyError(f"unknown field {f!r}")
+        want = list(dict.fromkeys(want))
+        flt = ds.field("doc_id").isin(pa.array(ids, type=pa.int64()))
+        parts = [
+            d.to_table(columns=[n for n in want if n in d.schema.names], filter=flt)
+            for d in sets
+        ]
+        return names, pa.concat_tables(parts, promote_options="permissive")
+
     def search(
         self,
         query,
@@ -393,34 +591,27 @@ class HuntEngine:
             cached = self._plan_cache.get(key)
             if cached is not None:
                 return cached
+        gen = self._gen
         res = self._search_plan(query, k, offset, use_wand, fields)
         if key is not None:
-            self._cache_put(self._plan_cache, key, res)
+            self._cache_put(self._plan_cache, key, res, gen)
         return res
 
-    @staticmethod
-    def _cache_put(cache: dict, key, value, cap: int = 256) -> None:
-        """Insert with FIFO eviction, tolerant of concurrent evictors:
-        the HTTP server calls search()/search_count() from multiple
-        threads, and two threads hitting the cap together could race
-        check-then-pop (one raising KeyError → a 500 on a valid query).
-        dict ops themselves are atomic under the GIL; only the compound
-        evict needs the tolerance."""
-        while len(cache) >= cap:
-            try:
+    def _cache_put(self, cache: dict, key, value, gen: int, cap: int = 256) -> None:
+        """Insert with FIFO eviction, unless a mutation invalidated the
+        engine since generation ``gen`` (the value may predate it).
+        Readers take entries with one lock-free ``.get()``."""
+        with self._cache_lock:
+            if gen != self._gen:
+                return
+            while len(cache) >= cap:
                 cache.pop(next(iter(cache)))
-            except (KeyError, StopIteration, RuntimeError):
-                # lost the race: another thread evicted/cleared
-                # (KeyError), emptied the dict (StopIteration), or
-                # mutated it mid-iteration (RuntimeError: 'dictionary
-                # changed size during iteration') — cap is satisfied
-                break
-        cache[key] = value
+            cache[key] = value
 
     def _search_plan(
         self, query, k: int, offset: int, use_wand, fields
     ) -> DataFrame:
-        ast = self._ast(query)
+        ast = self._parsed(query)
         c = self.compiler()
         scored = None
         if use_wand in ("auto", True):
@@ -432,9 +623,9 @@ class HuntEngine:
                 wx = self.wand()
                 if wx is not None:
                     op, legs = shape
-                    scored = wx.topk_candidates(
+                    scored = c.collapse_contexts(wx.topk_candidates(
                         op, legs, k + offset, c.default_contexts
-                    )
+                    ))
                 elif use_wand is True:
                     # state-dependent (not a query-shape) condition:
                     # name the reason instead of a misleading error
@@ -442,8 +633,7 @@ class HuntEngine:
                         f"WAND unavailable: {self._wand_unavailable}"
                     )
         if scored is None:
-            scored = c.eval(ast)
-        scored = c.collapse_contexts(scored)
+            scored = self._scored(query, ast)
         extra = [f for f in (fields or []) if f not in ("doc_id", "url", "weight")]
         # WeightAPI (API.hs:110-113): project the document weight into
         # the result when requested
@@ -476,14 +666,18 @@ class HuntEngine:
     def search_count(self, query) -> int:
         """Total number of matching documents — the reference's
         ``lrCount`` (size of the complete result BEFORE offset/limit,
-        ApiDocument.hs:60,72-81; Interpreter.hs execSearch). Cached per
-        query string; invalidated with the plan cache on mutation."""
+        ApiDocument.hs:60,72-81; Interpreter.hs execSearch): the rows of
+        the scored frame the top-k plan is built on, so the query is not
+        compiled again. Cached per query string; invalidated with the
+        plan cache on mutation."""
         key = query if isinstance(query, str) else None
-        if key is not None and key in self._count_cache:
-            return self._count_cache[key]
-        n = self.select(query).count()
-        if key is not None:
-            self._cache_put(self._count_cache, key, n)
+        n = self._count_cache.get(key) if key is not None else None
+        if n is None:
+            gen = self._gen
+            # one row per matching doc: the count of select(query)
+            n = self._scored(query).count()
+            if key is not None:
+                self._cache_put(self._count_cache, key, n, gen)
         return n
 
     def select(self, query) -> DataFrame:
@@ -508,8 +702,9 @@ class HuntEngine:
             cached = self._plan_cache.get(key)
             if cached is not None:
                 return cached
+            gen = self._gen
             res = self._completion_plan(prefix, k, cxs)
-            self._cache_put(self._plan_cache, key, res)
+            self._cache_put(self._plan_cache, key, res, gen)
             return res
         return self._completion_plan(prefix, k, cxs, doc_filter)
 
@@ -577,15 +772,18 @@ class HuntEngine:
         missing -> None, caller falls back to the postings scan. No
         Spark job on the serving path; the frame is cached until the
         next mutation so repeat completions skip the catalog re-read."""
-        if self._term_totals is not None:
-            return self._term_totals
+        tt = self._term_totals
+        if tt is not None:
+            return tt
+        gen = self._gen
         if not self._derived_fresh(["term_totals"]):
             return None
         try:
-            self._term_totals = self.catalog.read(self.spark, "term_totals")
+            tt = self.catalog.read(self.spark, "term_totals")
         except FileNotFoundError:
             return None
-        return self._term_totals
+        self._remember(gen, _term_totals=tt)
+        return tt
 
     def complete_query(self, query: str, k: int = 10) -> DataFrame:
         """Completion over a whole query being typed (Hunt

@@ -31,6 +31,12 @@ query time:
 4. scan the surviving blocks once (Spark mapInPandas varbyte decode,
    vectorized), aggregate per doc, top-k.
 
+A query whose terms' blocks hold at most ``DRIVER_POSTINGS`` postings
+skips all of that: ``WandExecutor.driver_scores`` reads those blocks
+with pyarrow and decodes them on the driver with the same per-block
+kernel, with no Spark job (a hot term of a small index decodes in
+milliseconds, where a job costs around a second).
+
 Exactness: any doc whose computed score ≥ θ has no pruned block
 (else its true score — and hence its computed partial — would be
 < θ), so its computed score is exact; and ≥ k seed docs score ≥ θ.
@@ -43,6 +49,8 @@ driver-side overlap checks cannot drift at boundaries.
 
 from __future__ import annotations
 
+import functools
+import threading
 from bisect import bisect_right
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -56,6 +64,9 @@ from hunt_spark.functions.varbyte import delta_varbyte_decode
 from hunt_spark.plans.ast import QBoost, QFullWord, QSeq
 
 U32_SPAN = 1 << 32
+# the most postings a query's blocks may hold to be decoded and scored
+# on the driver (driver_scores); above it the distributed executor runs
+DRIVER_POSTINGS = 1 << 18
 
 
 @dataclass(frozen=True)
@@ -146,16 +157,13 @@ class _TermBlocks:
         return best
 
 
-def _decode(
-    blocks: DataFrame,
-    legs: list[WandLeg],
-    keep: dict[tuple[str, str], list[tuple[int, int]]],
-    idf: dict[tuple[str, str], float],
-    avg_dl: dict[str, float],
-) -> DataFrame:
-    """Scan the kept ((context, term_lc) -> block_id set) blocks; emit per
-    (context, doc_id, term_lc) the similarity-weighted boosted BM25
-    contribution (max over case variants — mirrors compiler._scan).
+def score_block(
+    leg: WandLeg, vb: bytes, variants, tfs, dls, idf: float, avg_dl: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode one block of one query leg: (doc ids, similarity-weighted
+    boosted BM25 contributions), one entry per posting (a doc holding
+    two case variants of the term has two). ``variants`` is null where
+    the indexed term equals term_lc.
 
     Scores are bit-identical to the full plan's: ``idf`` per (context,
     term_lc) is computed once with the JVM's StrictMath.log (Spark's
@@ -165,6 +173,34 @@ def _decode(
     with the boost last."""
     from hunt_spark.operators.build import BM25_B, BM25_K1
 
+    ids = delta_varbyte_decode(bytes(vb))
+    tf = np.asarray(tfs, dtype=np.float64)
+    dl = np.asarray(dls, dtype=np.float64)
+    varr = np.asarray(variants, dtype=object)
+    varr = np.where(pd.isna(varr), leg.term_lc, varr)
+    if leg.op == "case":
+        m = varr == leg.word
+        ids, tf, dl, varr = ids[m], tf[m], dl[m], varr[m]
+    # Keys.hs similar': equal -> 1.0, same length (always true within a
+    # term_lc group) -> 0.75
+    sim = np.where(varr == leg.word, 1.0, 0.75)
+    tfn = (tf * (BM25_K1 + 1.0)) / (
+        tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avg_dl)
+    )
+    return ids, sim * idf * tfn * leg.boost
+
+
+def _decode(
+    blocks: DataFrame,
+    legs: list[WandLeg],
+    keep: dict[tuple[str, str], list[tuple[int, int]]],
+    idf: dict[tuple[str, str], float],
+    avg_dl: dict[str, float],
+) -> DataFrame:
+    """Scan the kept ((context, term_lc) -> block_id set) blocks; emit per
+    (context, doc_id, term_lc) the similarity-weighted boosted BM25
+    contribution (max over case variants — mirrors compiler._scan), one
+    ``score_block`` call per block row."""
     conds = None
     for (cx, t), ivs in keep.items():
         ic = None
@@ -188,26 +224,11 @@ def _decode(
                 b["context"], b["term_lc"], b["doc_ids_vb"],
                 b["variants"], b["tfs"], b["dls"],
             ):
-                leg = by_lc[lc]
-                ids = delta_varbyte_decode(bytes(vb))
-                tf = np.asarray(tfs, dtype=np.float64)
-                dl = np.asarray(dls, dtype=np.float64)
-                # resolve original-case variants (null == lowercase term)
-                varr = np.asarray(variants, dtype=object)
-                varr[pd.isna(varr)] = lc
-                if leg.op == "case":
-                    m = varr == leg.word
-                    ids, tf, dl, varr = ids[m], tf[m], dl[m], varr[m]
+                ids, s = score_block(
+                    by_lc[lc], vb, variants, tfs, dls, idf[(ctx, lc)], avg_dl[ctx]
+                )
                 if len(ids) == 0:
                     continue
-                # Keys.hs similar': equal -> 1.0, same length (always
-                # true within a term_lc group) -> 0.75
-                sim = np.where(varr == leg.word, 1.0, 0.75)
-                a_dl = avg_dl[ctx]
-                tfn = (tf * (BM25_K1 + 1.0)) / (
-                    tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / a_dl)
-                )
-                s = sim * idf[(ctx, lc)] * tfn * leg.boost
                 ctx_o.extend([ctx] * len(ids))
                 doc_o.append(ids)
                 lc_o.extend([lc] * len(ids))
@@ -241,6 +262,39 @@ def _aggregate(decoded: DataFrame, op: str, n_legs: int) -> DataFrame:
     return agg.select("context", "doc_id", "score")
 
 
+def _aggregate_np(
+    op: str, legs: list[WandLeg], hits: dict[str, list[tuple]]
+) -> tuple[np.ndarray, np.ndarray]:
+    """_aggregate's rule over decoded (doc ids, contributions) per
+    term_lc, for one context: the max over case variants per (doc,
+    term), then the sum of the legs in query order; AND keeps the docs
+    every leg holds. Returns (doc ids ascending, scores)."""
+    per_leg = []
+    for leg in legs:
+        parts = [p for p in hits.get(leg.term_lc, []) if len(p[0])]
+        if not parts:
+            continue
+        ids = np.concatenate([p[0] for p in parts])
+        s = np.concatenate([p[1] for p in parts])
+        order = np.argsort(ids, kind="stable")
+        ids, s = ids[order], s[order]
+        starts = np.flatnonzero(np.concatenate(([True], ids[1:] != ids[:-1])))
+        per_leg.append((ids[starts], np.maximum.reduceat(s, starts)))
+    if not per_leg or (op == "and" and len(per_leg) < len(legs)):
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    docs = np.unique(np.concatenate([u for u, _m in per_leg]))
+    score = np.zeros(len(docs))
+    n = np.zeros(len(docs), dtype=np.int64)
+    for u, m in per_leg:
+        i = np.searchsorted(docs, u)
+        score[i] += m
+        n[i] += 1
+    if op == "and":
+        keep = n == len(legs)
+        docs, score = docs[keep], score[keep]
+    return docs, score
+
+
 def _coalesce(ivs: list[tuple[int, int]], cap: int = 256) -> list[tuple[int, int]]:
     """Merge adjacent/overlapping [lo, hi] block-id intervals; if more
     than ``cap`` disjoint runs remain, widen to the convex hull — a
@@ -268,9 +322,19 @@ class WandExecutor:
         avg_dl: dict[str, float],
         seed_factor: int = 4,
         max_stats_rows: int = 65536,
+        path: str | None = None,
+        doc_weight: float = 1.0,
     ):
         self.spark = spark
-        self.blocks = blocks
+        # the blocks table, or a function that reads it when first used
+        # (the driver route needs no DataFrame)
+        self._blocks = blocks
+        # the blocks snapshot's directory, for driver_scores
+        self.path = path
+        # the weight every doc carries (WAND requires one weight)
+        self.doc_weight = doc_weight
+        self._dataset = None
+        self._idfs: dict[tuple[str, int], float] = {}
         self.n_shards = n_shards
         self.n_docs = {k: float(v) for k, v in n_docs.items()}
         self.avg_dl = {k: float(v) for k, v in avg_dl.items()}
@@ -279,14 +343,35 @@ class WandExecutor:
         # 10^12 docs has df/4096 ~ millions of blocks; grouping keeps
         # the collect O(max_stats_rows) regardless of df
         self.max_stats_rows = max_stats_rows
-        self.last_stats: dict | None = None  # pruning observability
+        self._local = threading.local()
+
+    @functools.cached_property
+    def blocks(self) -> DataFrame:
+        return self._blocks if isinstance(self._blocks, DataFrame) else self._blocks()
+
+    @property
+    def last_stats(self) -> dict | None:
+        """Pruning record of this thread's last topk_candidates or
+        driver_scores call (None before the first): requests run on
+        their own server threads, so one shared record would hold
+        whichever finished last."""
+        return getattr(self._local, "stats", None)
+
+    @last_stats.setter
+    def last_stats(self, stats: dict) -> None:
+        self._local.stats = stats
 
     def _idf(self, cx: str, df: int) -> float:
         """idf_col in Python: the same double arithmetic, and the JVM's
         StrictMath.log — the function behind Spark's ``ln`` — over py4j,
-        with no Spark job."""
-        x = 1.0 + (self.n_docs[cx] - float(df) + 0.5) / (float(df) + 0.5)
-        return self.spark.sparkContext._jvm.java.lang.StrictMath.log(x)
+        with no Spark job. Kept per (context, df): the stats are fixed
+        for the executor's life."""
+        idf = self._idfs.get((cx, df))
+        if idf is None:
+            x = 1.0 + (self.n_docs[cx] - float(df) + 0.5) / (float(df) + 0.5)
+            idf = self.spark.sparkContext._jvm.java.lang.StrictMath.log(x)
+            self._idfs[(cx, df)] = idf
+        return idf
 
     def _shards_for(self, terms: list[str]) -> list[int]:
         # driver-side xxhash64 twin (functions/xxh64.py) — no Spark job
@@ -294,6 +379,82 @@ class WandExecutor:
         from hunt_spark.functions.xxh64 import spark_shard
 
         return sorted({spark_shard(t, self.n_shards) for t in terms})
+
+    def _blocks_dataset(self):
+        """The blocks snapshot as a pyarrow dataset over its hive
+        context=/shard= directories."""
+        if self._dataset is None:
+            import pyarrow as pa
+            import pyarrow.dataset as ds
+
+            part = ds.partitioning(
+                pa.schema([("context", pa.string()), ("shard", pa.int32())]),
+                flavor="hive",
+            )
+            self._dataset = ds.dataset(self.path, format="parquet", partitioning=part)
+        return self._dataset
+
+    def driver_scores(
+        self, op: str, legs: list[WandLeg], contexts: tuple
+    ) -> tuple[np.ndarray, np.ndarray] | None:
+        """(doc ids, scores) of every matching doc, decoded and
+        aggregated on the driver with no Spark job; None when the query
+        terms' blocks hold more than DRIVER_POSTINGS postings. The scores
+        are _decode + _aggregate's, in one context (the engine's gate
+        opens WAND on single-context indexes only).
+
+        The directory partitions prune contexts and shards, the term_lc
+        filter uses the row groups' statistics (the blocks are sorted by
+        term_lc), and the payload columns are read only after the
+        n_postings total passed the check."""
+        import pyarrow.compute as pc
+
+        terms = [x.term_lc for x in legs]
+        dset = self._blocks_dataset()
+        flt = (
+            pc.field("context").isin(list(contexts))
+            & pc.field("shard").isin(self._shards_for(terms))
+            & pc.field("term_lc").isin(terms)
+        )
+        n = 0
+        if "n_postings" in dset.schema.names:  # else: no blocks at all
+            n = pc.sum(
+                dset.to_table(columns=["n_postings"], filter=flt)["n_postings"]
+            ).as_py() or 0
+        if n > DRIVER_POSTINGS:
+            return None
+        hits: dict[str, list[tuple]] = {}
+        n_blocks = 0
+        if n:
+            tbl = dset.to_table(
+                columns=["context", "term_lc", "df", "doc_ids_vb",
+                         "variants", "tfs", "dls"],
+                filter=flt,
+            ).combine_chunks()
+            n_blocks = tbl.num_rows
+            # per-row slices of the list columns' flat values
+            lists = []
+            for name in ("variants", "tfs", "dls"):
+                arr = tbl.column(name).chunk(0)
+                lists.append((arr.offsets.to_numpy(),
+                              arr.values.to_numpy(zero_copy_only=False)))
+            by_lc = {x.term_lc: x for x in legs}
+            idf: dict[tuple[str, str], float] = {}
+            for i, (ctx, lc, df, vb) in enumerate(zip(
+                *(tbl.column(c).to_pylist()
+                  for c in ("context", "term_lc", "df", "doc_ids_vb"))
+            )):
+                if (ctx, lc) not in idf:
+                    idf[(ctx, lc)] = self._idf(ctx, df)
+                variants, tfs, dls = (v[o[i]:o[i + 1]] for o, v in lists)
+                hits.setdefault(lc, []).append(score_block(
+                    by_lc[lc], vb, variants, tfs, dls,
+                    idf[(ctx, lc)], self.avg_dl[ctx],
+                ))
+        self.last_stats = {
+            "route": "driver", "blocks_read": n_blocks, "postings_decoded": n,
+        }
+        return _aggregate_np(op, legs, hits)
 
     def _collect_stats(self, bl: DataFrame) -> tuple[list, int]:
         """Block(-group) stats rows bounded by max_stats_rows.
@@ -443,6 +604,7 @@ class WandExecutor:
                     n_kept += 1
 
         self.last_stats = {
+            "route": "distributed",
             "blocks_total": n_total,
             "blocks_scanned": n_kept,
             "pruned_frac": round(1 - n_kept / n_total, 4) if n_total else 0.0,

@@ -346,12 +346,11 @@ class HuntServer:
         from hunt_spark.plans.parser import ParseError
 
         try:
-            # pass the RAW query string: engine.search keys its serving
-            # plan cache on it (parse errors map to 400 here)
-            rows = self.engine.search(
+            # pass the RAW query string: the engine keys its serving
+            # caches on it (parse errors map to 400 here)
+            rows, total = self.engine.search_page(
                 q, k=k, offset=offset, fields=fields
-            ).collect()
-            total = self.engine.search_count(q)
+            )
         except ParseError as e:
             raise HuntApiError(400, f"parse error: {e}") from e
         return _limited(

@@ -210,12 +210,13 @@ class IndexCatalog:
         return {"expired": expired, "kept_last": keep_last}
 
     # ---- read ----
-    def current_paths(
+    def current_entries(
         self, table: str, pinned_snapshot: str | None = None
-    ) -> list[str]:
-        """Paths forming the table's current state: the newest base
-        (mode=overwrite) snapshot plus all appends committed after it.
-        A pinned snapshot reads exactly that snapshot (VERSION AS OF)."""
+    ) -> list[dict]:
+        """Manifest entries forming the table's current state: the newest
+        base (mode=overwrite) snapshot plus all appends committed after
+        it. A pinned snapshot reads exactly that snapshot (VERSION AS
+        OF)."""
         snaps = self.snapshots(table)
         if not snaps:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
@@ -226,17 +227,21 @@ class IndexCatalog:
                         raise FileNotFoundError(
                             f"snapshot {pinned_snapshot} of {table} has been expired"
                         )
-                    return [e["path"]]
+                    return [e]
             raise FileNotFoundError(f"snapshot {pinned_snapshot} of {table} not found")
         base = 0
         for i, e in enumerate(snaps):
             if e.get("mode", "overwrite") == "overwrite":
                 base = i
-        return [snaps[base]["path"]] + [
-            e["path"]
-            for e in snaps[base + 1 :]
-            if e.get("mode", "overwrite") == "append"
+        return [snaps[base]] + [
+            e for e in snaps[base + 1 :] if e.get("mode", "overwrite") == "append"
         ]
+
+    def current_paths(
+        self, table: str, pinned_snapshot: str | None = None
+    ) -> list[str]:
+        """Paths of current_entries."""
+        return [e["path"] for e in self.current_entries(table, pinned_snapshot)]
 
     def latest_path(self, table: str, pinned_snapshot: str | None = None) -> str:
         return self.current_paths(table, pinned_snapshot)[-1]

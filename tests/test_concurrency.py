@@ -60,3 +60,41 @@ def test_concurrent_same_uri_insert_exactly_one_wins(spark, eng):
     # check and the doc is inserted twice; with it, exactly one wins
     assert sorted(results) == ["dup", "ok"], results
     assert eng.search("'duplicated'", k=10).count() == 1
+
+
+def test_cache_puts_never_outlive_an_invalidation(tmp_path):
+    """Serving threads put cache entries while mutations invalidate:
+    an entry derived before an invalidation must never stay cached
+    after it. Each put stores the generation it started at, so after
+    the last invalidation every cached value must equal the current
+    generation."""
+    import sys
+    import threading
+
+    eng = HuntEngine(None, str(tmp_path / "cat"))
+    stop = threading.Event()
+
+    def reader(tid: int) -> None:
+        i = 0
+        while not stop.is_set():
+            gen = eng._gen
+            eng._cache_put(eng._plan_cache, (tid, i % 300), gen, gen)
+            eng._plan_cache.get((tid, (i * 7) % 300))
+            i += 1
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(t,)) for t in range(8)]
+        for t in threads:
+            t.start()
+        for _ in range(300):
+            eng._invalidate()
+        stop.set()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert eng._gen == 300
+    assert all(v == eng._gen for v in list(eng._plan_cache.values()))

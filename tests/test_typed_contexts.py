@@ -190,21 +190,31 @@ _DATE_TOKEN_ST = st.one_of(
 )
 
 
-@given(st.lists(_DATE_TOKEN_ST, min_size=1, max_size=8))
-@settings(max_examples=60, deadline=None)
-def test_date_norm_jvm_python_parity(tokens):
+@given(st.lists(st.lists(_DATE_TOKEN_ST, min_size=1, max_size=8),
+                min_size=40, max_size=40))
+@settings(max_examples=3, deadline=None)
+def test_date_norm_jvm_python_parity(token_lists):
     """_date_norm_expr (Catalyst) == date_norm_py on generated tokens
-    spanning every form, the tz/leap/fraction edges, and rejects."""
+    spanning every form, the tz/leap/fraction edges, and rejects. Each
+    example evaluates its 40 token lists as the rows of one DataFrame:
+    one Spark job per example, not per list (hypothesis's first example
+    is the minimal one, so two random examples bring 80 lists)."""
     spark = test_date_norm_jvm_python_parity._spark
     from hunt_spark.functions.analysis import normalize_context_col
 
-    text = " ".join(tokens)
-    df = spark.createDataFrame([(text,)], "d string")
-    got = df.select(
-        normalize_context_col(F.col("d"), "date").alias("n")
-    ).first()["n"]
-    want = [k for t in tokens if (k := date_norm_py(t)) is not None]
-    assert got.split() == want, tokens
+    df = spark.createDataFrame(
+        [(i, " ".join(tokens)) for i, tokens in enumerate(token_lists)],
+        "i int, d string",
+    )
+    got = {
+        r["i"]: r["n"]
+        for r in df.select(
+            "i", normalize_context_col(F.col("d"), "date").alias("n")
+        ).collect()
+    }
+    for i, tokens in enumerate(token_lists):
+        want = [k for t in tokens if (k := date_norm_py(t)) is not None]
+        assert got[i].split() == want, tokens
 
 
 @pytest.fixture(autouse=True)

@@ -209,3 +209,171 @@ def test_wand_scores_bit_identical_to_full_plan(spark, tmp_path_factory):
         assert [(r["doc_id"], r["score"]) for r in pruned] == [
             (r["doc_id"], r["score"]) for r in full
         ], q
+
+
+def _page_matches_full_plan(eng, q):
+    rows, total = eng.search_page(q, k=K)
+    full = eng.search(q, k=K, use_wand=False).collect()
+    assert [(r["doc_id"], r["url"]) for r in rows] == [
+        (r["doc_id"], r["url"]) for r in full
+    ], q
+    for a, b in zip(rows, full):
+        assert math.isclose(a["score"], b["score"], rel_tol=0, abs_tol=1e-9)
+    assert total == eng.select(q).count(), q
+
+
+@pytest.mark.parametrize("q", WAND_QUERIES)
+def test_search_page_routes_match_full_plan(wand_engine, q, monkeypatch):
+    """search_page answers WAND-shaped queries on the driver; with the
+    postings cap at 0 the same requests take the distributed executor.
+    Both routes give the full plan's page and its exact total."""
+    import hunt_spark.plans.wand as wand_mod
+
+    _page_matches_full_plan(wand_engine, q)
+    assert wand_engine.wand().last_stats["route"] == "driver"
+    monkeypatch.setattr(wand_mod, "DRIVER_POSTINGS", 0)
+    _page_matches_full_plan(wand_engine, q)
+    st = wand_engine.wand().last_stats
+    if st["route"] == "driver":  # a query without postings stays there
+        assert st["postings_decoded"] == 0
+    else:
+        assert st["route"] == "distributed"
+
+
+def test_last_stats_is_per_thread(wand_engine):
+    import threading
+
+    wx = wand_engine.wand()
+    op, legs = compile_wand(parse_query("'brain'"))
+    wx.driver_scores(op, legs, ("text",))
+    mine = wx.last_stats
+    seen = []
+    t = threading.Thread(target=lambda: seen.append(wx.last_stats))
+    t.start()
+    t.join()
+    assert seen == [None] and mine["route"] == "driver"
+    assert mine["postings_decoded"] > 0 and mine["blocks_read"] > 0
+
+
+def test_cache_put_skipped_after_concurrent_mutation(wand_engine, monkeypatch):
+    """A plan, frame or count derived before a mutation must not be
+    cached after it: the generation the request started with moved."""
+    eng = wand_engine
+    q = "'brain' AND NOT 'pinky'"
+    plan, scored = HuntEngine._search_plan, HuntEngine._scored
+
+    def plan_then_mutation(self, *a, **kw):
+        res = plan(self, *a, **kw)
+        self._invalidate()
+        return res
+
+    def scored_then_mutation(self, *a, **kw):
+        res = scored(self, *a, **kw)
+        self._invalidate()
+        return res
+
+    monkeypatch.setattr(HuntEngine, "_search_plan", plan_then_mutation)
+    eng.search(q, k=K)
+    assert not eng._plan_cache and not eng._frame_cache
+    monkeypatch.setattr(HuntEngine, "_search_plan", plan)
+    monkeypatch.setattr(HuntEngine, "_scored", scored_then_mutation)
+    eng.search_count(q)
+    assert not eng._count_cache and not eng._frame_cache
+    monkeypatch.setattr(HuntEngine, "_scored", scored)
+    n = eng.search_count(q)
+    assert eng._count_cache == {q: n} and q in eng._frame_cache
+
+
+@pytest.fixture(scope="module")
+def ties_server(spark, tmp_path_factory):
+    """A single-context index served over HTTP, whose docs all weigh
+    2.0 (uniform, so WAND stays open) and carry a description: 'alpha'
+    scores ten docs equally, below four docs that hold it twice."""
+    from hunt_spark.server import HuntServer
+
+    docs = [
+        (f"https://example.org/tie/{i:02d}", "alpha beta" if i < 10 else
+         "alpha alpha beta" if i < 14 else "beta gamma", 2.0,
+         {"author": f"a{i}", "stars": str(i % 5)})
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(
+        docs,
+        "url string, text string, weight double, "
+        "description map<string, string>",
+    )
+    eng = HuntEngine(
+        spark, str(tmp_path_factory.mktemp("ties")),
+        BuildConfig(n_shards=2, salt_buckets=1),
+    )
+    eng.build(df, {"text": F.col("text")}, build_id="ties")
+    srv = HuntServer(eng).start()
+    yield srv
+    srv.shutdown()
+
+
+def _http(srv, path, body=None):
+    import json
+    import urllib.request
+
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{srv.port}{path}",
+        data=None if body is None else json.dumps(body).encode(),
+        method="GET" if body is None else "POST",
+        headers={"Content-Type": "application/json"},
+    )
+    with urllib.request.urlopen(req) as r:
+        return json.loads(r.read())
+
+
+def test_http_driver_route_ties_offset_weight_fields(ties_server):
+    from urllib.parse import quote
+
+    eng = ties_server.engine
+    q = "'alpha'"
+    full = eng.search(q, k=20, use_wand=False, fields=["weight"]).collect()
+    assert len(full) == 14 and full[4]["score"] == full[13]["score"]
+    eng._plan_cache.clear()
+    # the 6th result is the 2nd of ten docs tied on score: url decides
+    page = _http(ties_server, f"/search/{quote(q)}?offset=3&limit=3")
+    assert [r["uri"] for r in page["result"]] == [r["url"] for r in full[3:6]]
+    assert page["count"] == 14
+    for got, want in zip(page["result"], full[3:6]):
+        assert got["score"] == pytest.approx(want["score"], abs=1e-12)
+        i = int(want["url"][-2:])
+        assert got["description"] == {"author": f"a{i}", "stars": str(i % 5)}
+    # offset past the total: an empty page with the true count
+    page = _http(ties_server, f"/search/{quote(q)}?offset=30&limit=5")
+    assert page["result"] == [] and page["count"] == 14
+    # /weight projects the doc weight; the scores already carry it
+    page = _http(ties_server, f"/weight/{quote(q)}")
+    assert [r["uri"] for r in page["result"]] == [r["url"] for r in full]
+    assert all(r["weight"] == 2.0 for r in page["result"])
+    # description projection keeps only the asked-for keys
+    res = _http(ties_server, "/eval", {"cmd": "search", "query": q, "max": 2,
+                                       "fields": ["author"]})["res"]
+    assert [r["description"] for r in res["result"]] == [
+        {"author": "a" + str(int(r["url"][-2:]))} for r in full[:2]
+    ]
+    # an unknown term matches nothing
+    page = _http(ties_server, "/search/" + quote("'nosuchterm'"))
+    assert page["result"] == [] and page["count"] == 0
+    # every one of these ran on the driver: no plan was built
+    assert not eng._plan_cache
+
+
+def test_wand_closed_on_typed_context(spark, tmp_path_factory):
+    """An int context stores zero-filled keys: the full plan normalizes
+    the query word, the WAND legs would look up '2005' as typed and
+    find nothing, so the gate stays closed and auto-routing finds it."""
+    rows = [(f"u{y}", str(y)) for y in (2000, 2005, 2010)]
+    eng = HuntEngine(
+        spark, str(tmp_path_factory.mktemp("typed_wand")),
+        BuildConfig(n_shards=2, salt_buckets=1, context_types={"year": "int"}),
+    )
+    eng.build(spark.createDataFrame(rows, "url string, year string"),
+              {"year": F.col("year")}, build_id="typed")
+    assert eng.wand() is None
+    assert eng._wand_unavailable == "context normalizes query words"
+    rows, total = eng.search_page("'2005'", k=K)
+    assert [r["url"] for r in rows] == ["u2005"] and total == 1
