@@ -8,6 +8,7 @@ LoadIx/StoreIx/Status).
 from __future__ import annotations
 
 import functools
+import json
 import threading
 
 import numpy as np
@@ -29,6 +30,13 @@ from hunt_spark.plans.compiler import IndexStats, QueryCompiler, sim_col
 from hunt_spark.plans.parser import parse_query
 from hunt_spark.plans.wand import WandExecutor, compile_wand
 from hunt_spark.sources.catalog import IndexCatalog
+
+# the most committed doc_meta bytes the driver route of search_page
+# scans with pyarrow for a page's urls; above it the distributed plan
+# runs. On a 4-core host a scan of 3-47 MB took 0.01-0.09 s and grew the
+# driver's peak RSS by 16-27 MB, against at least 1.7 s for the
+# distributed route's cheapest request on a 3 MB doc_meta
+DRIVER_DOC_META_BYTES = 1 << 25
 
 
 def _mutating(fn):
@@ -369,7 +377,7 @@ class HuntEngine:
         )
         return WandExecutor(
             self.spark, blocks, self.cfg.n_shards, st.n_docs, st.avg_dl,
-            path=snap["path"], doc_weight=weight,
+            snap["path"], weight,
         ), None
 
     def _uniform_doc_weight(self) -> float | None:
@@ -470,8 +478,8 @@ class HuntEngine:
 
         A WAND-shaped query is answered on the driver with no Spark job
         when the WAND gate is open, its terms' blocks hold at most
-        DRIVER_POSTINGS postings and doc_meta is small enough that Spark
-        would broadcast it into the join anyway (_driver_page). Any
+        DRIVER_POSTINGS postings and doc_meta holds at most
+        DRIVER_DOC_META_BYTES committed bytes (_driver_page). Any
         other query runs the distributed plan, whose count reuses the
         plan's compiled frame."""
         page = self._driver_page(query, k, offset, fields or [])
@@ -494,12 +502,14 @@ class HuntEngine:
         if wx is None:
             return None
         snaps = self.catalog.current_entries("doc_meta")
-        threshold = (
-            self.spark._jsparkSession.sessionState().conf()
-            .autoBroadcastJoinThreshold()
-        )
-        if sum(p["bytes"] for e in snaps for p in e["lineage"]) > threshold:
+        if sum(p["bytes"] for e in snaps for p in e["lineage"]) > DRIVER_DOC_META_BYTES:
             return None
+        # the columns every doc_meta snapshot recorded at commit (an
+        # empty snapshot has no files to read a schema from)
+        names = {
+            f["name"] for e in snaps for f in json.loads(e["schema"])["fields"]
+        }
+        out, extra = self._projection(fields, names)
         c = self.compiler()
         op, legs = shape
         hits = wx.driver_scores(op, legs, c.default_contexts)
@@ -507,18 +517,21 @@ class HuntEngine:
             return None
         ids, raw = hits
         total = len(ids)
+        n = k + offset
+        if total == 0 or n <= 0:
+            return [], total
         # at most one context (the WAND gate)
         cw = c.stats.context_weights.get(c.all_contexts[0], 1.0) if c.all_contexts else 1.0
         scores = raw * cw * wx.doc_weight
-        n = k + offset
-        if n <= 0:
-            return [], total
         if total > n:
             # every doc tied with the n-th score stays: url breaks ties
             keep = scores >= np.partition(scores, total - n)[total - n]
             ids, scores = ids[keep], scores[keep]
-        names, meta = self._doc_meta_arrow(snaps, ids, fields)
-        if meta.num_rows < len(ids):
+        want = ["doc_id", "url", "weight", *(f for f, col in extra if col)]
+        if not all(col for _f, col in extra):
+            want.append("description")
+        meta = self._doc_meta_arrow(snaps, ids, list(dict.fromkeys(want)))
+        if meta is None or meta.num_rows < len(ids):
             return None  # a posting without doc_meta: the join drops it
         cols = {name: meta[name].to_pylist() for name in meta.column_names}
         if "description" in cols:
@@ -528,45 +541,58 @@ class HuntEngine:
         cols["score"] = scores[
             np.searchsorted(ids, meta["doc_id"].to_numpy())
         ].tolist()
-        extra = [f for f in fields if f not in ("doc_id", "url", "weight")]
-        for f in extra:
-            if f not in names:  # a description key
+        for f, col in extra:
+            if not col:
                 cols[f] = [None if d is None else d.get(f)
                            for d in cols["description"]]
-        out = ["doc_id", "url", "score",
-               *(["weight"] if "weight" in fields else []), *extra]
         order = sorted(range(meta.num_rows),
                        key=lambda i: (-cols["score"][i], cols["url"][i]))
         row = Row(*out)
         return [row(*(cols[f][i] for f in out)) for i in order[offset:n]], total
 
     @staticmethod
-    def _doc_meta_arrow(snaps: list[dict], ids, fields: list[str]):
-        """(doc_meta's column names, its rows for doc ids ``ids``) read
-        with pyarrow from the snapshot directories ``snaps``: doc_id,
-        url, weight, and what ``fields`` projects — a doc_meta column,
-        or else a description key (_search_plan's rule)."""
+    def _projection(fields, columns) -> tuple[list[str], list[tuple[str, bool]]]:
+        """search's result columns for ``fields`` over doc_meta's
+        ``columns``: (all of them in order, the extra fields each with
+        whether it is a doc_meta column or else a description key —
+        Hunt mkSelect projects from the stored DocDesc,
+        Interpreter.hs:585-593). WeightAPI (API.hs:110-113) adds the
+        document weight when asked. KeyError for a field that is
+        neither."""
+        fields = fields or []
+        extra = []
+        for f in fields:
+            if f in ("doc_id", "url", "weight"):
+                continue
+            if f in columns:
+                extra.append((f, True))
+            elif "description" in columns:
+                extra.append((f, False))
+            else:
+                raise KeyError(f"unknown field {f!r}")
+        out = ["doc_id", "url", "score",
+               *(["weight"] if "weight" in fields else []),
+               *(f for f, _col in extra)]
+        return out, extra
+
+    @staticmethod
+    def _doc_meta_arrow(snaps: list[dict], ids, columns: list[str]):
+        """doc_meta's ``columns`` for the doc ids ``ids``, read with
+        pyarrow from the snapshot directories ``snaps``; None when no
+        snapshot holds a data file."""
         import pyarrow as pa
         import pyarrow.dataset as ds
 
         sets = [ds.dataset(e["path"], format="parquet") for e in snaps]
         sets = [d for d in sets if "doc_id" in d.schema.names]
-        names = {n for d in sets for n in d.schema.names}
-        want = ["doc_id", "url", "weight"]
-        for f in fields:
-            if f in names:
-                want.append(f)
-            elif "description" in names:
-                want.append("description")
-            else:
-                raise KeyError(f"unknown field {f!r}")
-        want = list(dict.fromkeys(want))
+        if not sets:
+            return None
         flt = ds.field("doc_id").isin(pa.array(ids, type=pa.int64()))
         parts = [
-            d.to_table(columns=[n for n in want if n in d.schema.names], filter=flt)
+            d.to_table(columns=[n for n in columns if n in d.schema.names], filter=flt)
             for d in sets
         ]
-        return names, pa.concat_tables(parts, promote_options="permissive")
+        return pa.concat_tables(parts, promote_options="permissive")
 
     def search(
         self,
@@ -634,29 +660,15 @@ class HuntEngine:
                     )
         if scored is None:
             scored = self._scored(query, ast)
-        extra = [f for f in (fields or []) if f not in ("doc_id", "url", "weight")]
-        # WeightAPI (API.hs:110-113): project the document weight into
-        # the result when requested
-        with_weight = "weight" in (fields or [])
         dm = self.doc_meta()
-        # a field names either a doc_meta column or a description key
-        # (Hunt mkSelect projects from the stored DocDesc,
-        # Interpreter.hs:585-593)
-        proj = []
-        for f in extra:
-            if f in dm.columns:
-                proj.append(F.col(f))
-            elif "description" in dm.columns:
-                proj.append(F.try_element_at("description", F.lit(f)).alias(f))
-            else:
-                raise KeyError(f"unknown field {f!r}")
+        out, extra = self._projection(fields, dm.columns)
+        proj = [
+            F.col(f) if col else F.try_element_at("description", F.lit(f)).alias(f)
+            for f, col in extra
+        ]
         meta = dm.select("doc_id", "url", "weight", *proj)
         res = scored.join(meta, "doc_id").select(
-            "doc_id",
-            "url",
-            (F.col("score") * F.col("weight")).alias("score"),
-            *(["weight"] if with_weight else []),
-            *extra,
+            *out[:2], (F.col("score") * F.col("weight")).alias("score"), *out[3:]
         )
         res = res.orderBy(F.desc("score"), F.asc("url"))
         if offset:

@@ -131,8 +131,8 @@ def test_wand_bounded_stats_collect_identical(wand_engine, q):
 
     wx = wand_engine.wand()
     tiny = WandExecutor(
-        wand_engine.spark, wx.blocks, wand_engine.cfg.n_shards,
-        wx.n_docs, wx.avg_dl, max_stats_rows=4,
+        wand_engine.spark, lambda: wx.blocks, wand_engine.cfg.n_shards,
+        wx.n_docs, wx.avg_dl, wx.path, wx.doc_weight, max_stats_rows=4,
     )
     op, legs = cw(parse_query(q))
     full = wand_engine.search(q, k=K, use_wand=False).collect()
@@ -360,6 +360,40 @@ def test_http_driver_route_ties_offset_weight_fields(ties_server):
     assert page["result"] == [] and page["count"] == 0
     # every one of these ran on the driver: no plan was built
     assert not eng._plan_cache
+
+
+def test_driver_route_on_emptied_index(spark, tmp_path_factory):
+    """Deleting every doc and compacting leaves empty doc_meta and
+    blocks snapshots and the WAND gate open: the driver route answers
+    the full plan's empty page with count 0, also when the doc_meta
+    snapshot holds no data file at all (the state IndexCatalog.read
+    rebuilds from the recorded schema)."""
+    import glob
+    import os
+
+    docs = spark.createDataFrame(
+        [(f"https://example.org/gone/{i}", "alpha beta", {"author": f"a{i}"})
+         for i in range(6)],
+        "url string, text string, description map<string, string>",
+    )
+    eng = HuntEngine(
+        spark, str(tmp_path_factory.mktemp("emptied")),
+        BuildConfig(n_shards=2, salt_buckets=1),
+    )
+    eng.build(docs, {"text": F.col("text")}, build_id="emptied")
+    eng.delete_docs([f"https://example.org/gone/{i}" for i in range(6)])
+    eng.compact()
+    for drop_files in (False, True):
+        if drop_files:
+            for e in eng.catalog.current_entries("doc_meta"):
+                for f in glob.glob(os.path.join(e["path"], "*.parquet")):
+                    os.remove(f)
+            eng._invalidate()
+        assert eng.wand() is not None
+        assert eng.search_page("'alpha'", k=K) == ([], 0)
+        assert eng.search_page("'alpha'", k=K, fields=["description"]) == ([], 0)
+        assert eng.wand().last_stats["route"] == "driver"
+        assert eng.search("'alpha'", k=K, use_wand=False).collect() == []
 
 
 def test_wand_closed_on_typed_context(spark, tmp_path_factory):
