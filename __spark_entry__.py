@@ -532,8 +532,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "idx_bm25_boost": _q_search("'spark'^2 OR 'hash'"),
         "idx_bm25_prefix": _q_search("sc"),
         "idx_bm25_range": _q_search("[batch TO join]"),
-        # block-max WAND pruned executor, verified against the same
-        # oracle SQL as the full plan (rank+score identity at the gate)
+        # the WAND scorer (blocks decoded on the driver), verified
+        # against the same oracle SQL as the full plan (rank+score
+        # identity at the gate)
         "idx_wand_and": _q_search("'spark' 'hash'", use_wand=True),
         "idx_wand_or": _q_search("'spark' OR 'hash'", use_wand=True),
         # R5 pagination: page 2 of the ranking (offset in the plan)

@@ -7,7 +7,8 @@ Haskell single-node search platform) as a distributed Spark engine:
   (tokenize -> posexplode -> salted repartition -> sortWithinPartitions
   -> groupBy merge -> partitioned parquet postings),
 - collection statistics (N, avgdl, df) as broadcast DataFrames,
-- BM25 top-k retrieval with block-max-WAND-style pruning,
+- BM25 top-k retrieval; flat AND/OR word queries (WAND-shaped) are
+  scored on the driver from a compressed blocks artifact,
 - Hunt's query surface: word/prefix/case/nocase, AND/OR/AND NOT,
   phrase / FOLLOW n / NEAR n (position algebra), context restriction,
   boost, range queries, completion,

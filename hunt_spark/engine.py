@@ -26,16 +26,17 @@ from hunt_spark.operators.build import (
     term_stats,
     term_totals,
 )
+from hunt_spark.plans import wand as wand_plan
 from hunt_spark.plans.compiler import IndexStats, QueryCompiler, sim_col
 from hunt_spark.plans.parser import parse_query
 from hunt_spark.plans.wand import WandExecutor, compile_wand
 from hunt_spark.sources.catalog import IndexCatalog
 
 # the most committed doc_meta bytes the driver route of search_page
-# scans with pyarrow for a page's urls; above it the distributed plan
-# runs. On a 4-core host a scan of 3-47 MB took 0.01-0.09 s and grew the
-# driver's peak RSS by 16-27 MB, against at least 1.7 s for the
-# distributed route's cheapest request on a 3 MB doc_meta
+# scans with pyarrow for a page's urls; above it the full plan runs. On
+# a 4-core host a scan of 3-47 MB took 0.01-0.09 s and grew the driver's
+# peak RSS by 16-27 MB, against at least 1.7 s for the cheapest request
+# through a Spark job on a 3 MB doc_meta
 DRIVER_DOC_META_BYTES = 1 << 25
 
 
@@ -320,15 +321,15 @@ class HuntEngine:
         return comp
 
     def wand(self) -> WandExecutor | None:
-        """Block-max executor over the compressed blocks artifact.
+        """The WAND scorer over the compressed blocks artifact.
 
-        Pruning compares block upper bounds against a top-k threshold in
-        raw per-context-sum space, so it is only sound when the final
-        ranking is a monotone transform of that sum: single context (or
-        uniform context weights over one context), uniform doc weights,
-        no tombstones postdating the blocks snapshot (baked-in idf would
-        be stale). Otherwise fall back to the full plan. The verdict,
-        open or closed, holds until the next mutation."""
+        It scores from the blocks alone, so it opens only where they
+        give the full plan's ranking (_open_wand lists the conditions:
+        one context that needs no query-word normalization, uniform doc
+        weights, BM25, no doc_limit, and no postings mutation or
+        tombstone postdating the blocks snapshot). Otherwise the full
+        plan runs. The verdict, open or closed, holds until the next
+        mutation."""
         if self._wand is None and self._wand_unavailable is None:
             gen = self._gen
             wx, why = self._open_wand()
@@ -340,7 +341,7 @@ class HuntEngine:
         """(executor, None) when every WAND condition holds, else
         (None, the first one that fails)."""
         if self.scoring != "bm25":
-            return None, "blocks bake BM25 contributions"
+            return None, "the WAND scorer computes BM25 only"
         t = self._tombstones()
         if t is not None and t.limit(1).count() > 0:
             return None, "tombstones postdate the blocks snapshot"
@@ -370,13 +371,8 @@ class HuntEngine:
         if weight is None:
             return None, "non-uniform doc weights"
         st = self.compiler().stats
-        # the distributed executor reads the pinned snapshot the driver
-        # route reads, when it first needs it
-        blocks = functools.partial(
-            self.catalog.read, self.spark, "blocks", snap["snapshot_id"]
-        )
         return WandExecutor(
-            self.spark, blocks, self.cfg.n_shards, st.n_docs, st.avg_dl,
+            self.spark, self.cfg.n_shards, st.n_docs, st.avg_dl,
             snap["path"], weight,
         ), None
 
@@ -480,7 +476,7 @@ class HuntEngine:
         when the WAND gate is open, its terms' blocks hold at most
         DRIVER_POSTINGS postings and doc_meta holds at most
         DRIVER_DOC_META_BYTES committed bytes (_driver_page). Any
-        other query runs the distributed plan, whose count reuses the
+        other query runs the full plan, whose count reuses the
         plan's compiled frame."""
         page = self._driver_page(query, k, offset, fields or [])
         if page is not None:
@@ -489,12 +485,11 @@ class HuntEngine:
         return rows, self.search_count(query)
 
     def _driver_page(self, query, k: int, offset: int, fields: list[str]):
-        """search_page on the driver: WandExecutor.driver_scores gives
-        every matching doc's score; the context weight, then the doc
-        weight, multiply in as in collapse_contexts and _search_plan; the
-        docs scoring at least the (k+offset)-th score (ties included)
-        get their doc_meta row by a pyarrow doc_id filter, and sort by
-        (score DESC, url ASC). None when the route does not apply."""
+        """search_page on the driver: _wand_top gives the docs that can
+        reach the page, which get their doc_meta row by a pyarrow doc_id
+        filter, the doc weight multiplied in as in _search_plan, and
+        sort by (score DESC, url ASC). None when the route does not
+        apply."""
         shape = compile_wand(self._parsed(query))
         if shape is None:
             return None
@@ -510,23 +505,13 @@ class HuntEngine:
             f["name"] for e in snaps for f in json.loads(e["schema"])["fields"]
         }
         out, extra = self._projection(fields, names)
-        c = self.compiler()
-        op, legs = shape
-        hits = wx.driver_scores(op, legs, c.default_contexts)
-        if hits is None:
+        top = self._wand_top(wx, shape, k + offset)
+        if top is None:
             return None
-        ids, raw = hits
-        total = len(ids)
-        n = k + offset
-        if total == 0 or n <= 0:
+        ids, scores, total = top
+        if len(ids) == 0:
             return [], total
-        # at most one context (the WAND gate)
-        cw = c.stats.context_weights.get(c.all_contexts[0], 1.0) if c.all_contexts else 1.0
-        scores = raw * cw * wx.doc_weight
-        if total > n:
-            # every doc tied with the n-th score stays: url breaks ties
-            keep = scores >= np.partition(scores, total - n)[total - n]
-            ids, scores = ids[keep], scores[keep]
+        scores = scores * wx.doc_weight
         want = ["doc_id", "url", "weight", *(f for f, col in extra if col)]
         if not all(col for _f, col in extra):
             want.append("description")
@@ -548,7 +533,33 @@ class HuntEngine:
         order = sorted(range(meta.num_rows),
                        key=lambda i: (-cols["score"][i], cols["url"][i]))
         row = Row(*out)
-        return [row(*(cols[f][i] for f in out)) for i in order[offset:n]], total
+        return [row(*(cols[f][i] for f in out)) for i in order[offset:k + offset]], total
+
+    def _wand_top(self, wx: WandExecutor, shape, n: int):
+        """(doc ids ascending, scores, total) of a WAND-shaped query:
+        the matching docs whose final score (times the uniform doc
+        weight) is at least the n-th best, ties included (url breaks
+        them later), their scores with the context weight multiplied in
+        as in collapse_contexts, and the number of matching docs. The
+        caller multiplies the doc weight in. None above DRIVER_POSTINGS
+        postings."""
+        c = self.compiler()
+        op, legs = shape
+        hits = wx.topk_candidates(op, legs, c.default_contexts)
+        if hits is None:
+            return None
+        ids, scores = hits
+        total = len(ids)
+        # at most one context (the WAND gate)
+        cw = c.stats.context_weights.get(c.all_contexts[0], 1.0) if c.all_contexts else 1.0
+        scores = scores * cw
+        if n <= 0:
+            ids, scores = ids[:0], scores[:0]
+        elif total > n:
+            final = scores * wx.doc_weight
+            keep = final >= np.partition(final, total - n)[total - n]
+            ids, scores = ids[keep], scores[keep]
+        return ids, scores, total
 
     @staticmethod
     def _projection(fields, columns) -> tuple[list[str], list[tuple[str, bool]]]:
@@ -608,9 +619,11 @@ class HuntEngine:
 
         ``fields`` selects additional doc_meta columns into the result
         (Hunt mkSelect field projection, Interpreter.hs:585-593).
-        ``use_wand="auto"`` routes flat AND/OR-of-exact-words queries
-        through the block-max pruned executor (plans/wand.py); results
-        are rank-identical to the full plan (pinned by tests)."""
+        ``use_wand="auto"`` scores flat AND/OR-of-exact-words queries
+        on the driver from the blocks artifact (plans/wand.py) when the
+        WAND gate is open and their terms hold at most DRIVER_POSTINGS
+        postings, else runs the full plan; ``True`` requires the
+        former, ``False`` the latter. Both give the same page."""
         key = None
         if isinstance(query, str):
             key = (query, k, offset, use_wand, tuple(fields or ()))
@@ -638,7 +651,6 @@ class HuntEngine:
         self, query, k: int, offset: int, use_wand, fields
     ) -> DataFrame:
         ast = self._parsed(query)
-        c = self.compiler()
         scored = None
         if use_wand in ("auto", True):
             shape = compile_wand(ast)
@@ -647,17 +659,23 @@ class HuntEngine:
                     raise ValueError("query shape not WAND-compilable")
             else:
                 wx = self.wand()
-                if wx is not None:
-                    op, legs = shape
-                    scored = c.collapse_contexts(wx.topk_candidates(
-                        op, legs, k + offset, c.default_contexts
-                    ))
-                elif use_wand is True:
-                    # state-dependent (not a query-shape) condition:
-                    # name the reason instead of a misleading error
-                    raise RuntimeError(
-                        f"WAND unavailable: {self._wand_unavailable}"
+                top = None if wx is None else self._wand_top(wx, shape, k + offset)
+                if top is not None:
+                    import pyarrow as pa
+
+                    ids, scores, _total = top
+                    # from Arrow: a local relation, which a re-collect of
+                    # the cached plan reads with no Python worker
+                    scored = self.spark.createDataFrame(
+                        pa.table({"doc_id": ids, "score": scores})
                     )
+                elif use_wand is True:
+                    # state-dependent (not a query-shape) conditions:
+                    # name the reason instead of a misleading error
+                    why = (self._wand_unavailable if wx is None else
+                           "the query terms hold more than DRIVER_POSTINGS"
+                           f" = {wand_plan.DRIVER_POSTINGS} postings")
+                    raise RuntimeError(f"WAND unavailable: {why}")
         if scored is None:
             scored = self._scored(query, ast)
         dm = self.doc_meta()
@@ -1370,7 +1388,7 @@ class HuntEngine:
         # seq is re-derived from line index on read, so the export MUST
         # write entries in original commit order: grouping by table name
         # would give blocks.seq < postings.seq on every load and the
-        # wand() staleness gate would silently disable block-max WAND on
+        # wand() staleness gate would silently disable WAND on
         # loaded indexes forever.
         pinned.sort(key=lambda e: e["seq"])
         pinned = [{k: v for k, v in e.items() if k != "seq"} for e in pinned]

@@ -29,11 +29,11 @@ Stages (each committed as a catalog snapshot; resumable):
    completion. df = docs containing the term case-insensitively.
 4. ``blocks``    — grouped compressed artifact: postings split into
    doc_id-range blocks of <= block_size entries per (context, term_lc),
-   each block delta+varbyte packed (doc ids) with a block-max BM25
-   upper bound for WAND-style pruning. Block count per term scales
-   with df (two-phase: df join -> range split -> bounded groupBy), so
-   no group ever exceeds block_size — hot terms cannot blow executor
-   memory.
+   each block delta+varbyte packed (doc ids) with the tf and dl its
+   BM25 contributions are decoded from (plans/wand.py scores WAND-
+   shaped queries from it). Block count per term scales with df
+   (two-phase: df join -> range split -> bounded groupBy), so no group
+   ever exceeds block_size — hot terms cannot blow executor memory.
 """
 
 from __future__ import annotations
@@ -457,19 +457,10 @@ def tf_norm_col(tf: Column, dl: Column, avg_dl: Column) -> Column:
     )
 
 
-BLOCKS_SCHEMA = (
-    "context string, shard int, term_lc string, block_id int, "
-    "n_postings long, max_bm25 double, df long, n_blocks long, "
-    "doc_ids_vb binary, variants array<string>, tfs array<int>, "
-    "dls array<int>"
-)
-
-
 def build_blocks(
-    spark: SparkSession, postings: DataFrame, tstats: DataFrame,
-    cstats: DataFrame, cfg: BuildConfig,
+    spark: SparkSession, postings: DataFrame, tstats: DataFrame, cfg: BuildConfig,
 ) -> DataFrame:
-    """Compressed grouped artifact + block-max metadata.
+    """Compressed grouped artifact.
 
     Two-phase bounded grouping: join per-term df, derive n_blocks =
     ceil(df / block_size), assign each posting to a doc-hash *range*
@@ -489,21 +480,15 @@ def build_blocks(
     similarity weighting (Keys.hs:42-54) without storing 40M strings.
     BM25 contributions are recomputed at decode time from (tf, dl, df)
     + collection stats with the same IEEE double expression the full
-    plan uses. max_bm25 is the block-max upper bound for WAND pruning.
+    plan uses.
     """
-    c_rows = cstats.collect()
-    n_docs_by_cx = {r["context"]: float(r["n_docs"]) for r in c_rows}
-    avg_dl_by_cx = {r["context"]: float(r["avg_dl"]) for r in c_rows}
-    block_size = cfg.block_size
-
     n_blocks = F.greatest(
         F.lit(1), F.ceil(F.col("df") / F.lit(cfg.block_size))
     ).cast("long")
     # Exact integer block assignment over the doc-id hash space: u32 =
     # order-preserving top 32 bits of the signed doc_id, block_id =
-    # (u32 * n_blocks) >> 32. Pure long arithmetic — query-side pruning
-    # reconstructs block intervals with exact rationals (no float
-    # boundary drift).
+    # (u32 * n_blocks) >> 32. Pure long arithmetic: the assignment is
+    # stable across rebuilds and platforms.
     u32 = F.shiftrightunsigned(F.col("doc_id"), 32).bitwiseXOR(F.lit(0x80000000))
     block_id = F.shiftright(u32 * F.col("n_blocks"), 32).cast("int")
 
@@ -512,11 +497,11 @@ def build_blocks(
     # sub-bucket multiplies the key space while keeping every
     # (context, term_lc, block_id) group in ONE partition (all rows of a
     # term_lc hash to the same bucket), which is all the pack kernel's
-    # contiguity contract needs. ~4 keys per partition smooths the
-    # balls-in-bins imbalance of hashing few keys into as many tasks.
+    # contiguity contract needs. ~4 keys per partition and context
+    # smooths the balls-in-bins imbalance of hashing few keys into as
+    # many tasks.
     n_pack_parts = max(cfg.n_shards, 2 * spark.sparkContext.defaultParallelism)
-    n_cx = max(1, len(n_docs_by_cx))
-    sub_buckets = max(1, (4 * n_pack_parts) // (n_cx * cfg.n_shards))
+    sub_buckets = max(1, (4 * n_pack_parts) // cfg.n_shards)
     pack_bucket = F.pmod(F.xxhash64("term_lc"), F.lit(sub_buckets))
 
     # slim shuffle: ship only what the pack kernel needs — the
@@ -526,9 +511,7 @@ def build_blocks(
     # re-reads and re-aggregates the whole postings table inside the
     # blocks job — one full corpus scan traded for 8 bytes/row of
     # shuffle (guide §1.2: fewer passes; measured two extra
-    # postings-scan+agg subtrees in the r5 blocks plan). n_blocks stays
-    # derived (a pure function of df) and is recomputed on the packed
-    # block-granular rows.
+    # postings-scan+agg subtrees in the r5 blocks plan).
     pre = (
         postings.join(tstats.select("context", "term_lc", "df"),
                       ["context", "term_lc"])
@@ -555,8 +538,7 @@ def build_blocks(
     def pack_arrow(batches):
         """Arrow-native pack: the 43M-row sorted stream never becomes
         pandas object columns. Group boundaries come from dictionary
-        codes, per-group reductions from np.maximum.reduceat, the
-        delta+varbyte buffer is ONE whole-batch pack sliced by
+        codes, the delta+varbyte buffer is ONE whole-batch pack sliced by
         cumulative widths into a zero-copy BinaryArray, and the
         variants/tfs/dls list columns are zero-copy ListArrays over the
         group offsets."""
@@ -572,7 +554,6 @@ def build_blocks(
                 ("term_lc", pa.string()),
                 ("block_id", pa.int32()),
                 ("n_postings", pa.int64()),
-                ("max_tfn", pa.float64()),
                 ("doc_ids_vb", pa.binary()),
                 ("variants", pa.list_(pa.string())),
                 ("tfs", pa.list_(pa.int32())),
@@ -597,16 +578,6 @@ def build_blocks(
             )
             starts = np.concatenate(([0], brk + 1))
             ends = np.concatenate((brk + 1, [n]))
-            tf = cols["tf"].to_numpy().astype(np.float64)
-            dl = cols["dl"].to_numpy().astype(np.float64)
-            a_dl_by_code = np.array(
-                [avg_dl_by_cx[c] for c in cx_enc.dictionary.to_pylist()]
-            )
-            a_dl = a_dl_by_code[cx_c]
-            tfn = (tf * (BM25_K1 + 1.0)) / (
-                tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / a_dl)
-            )
-            max_tfn = np.maximum.reduceat(tfn, starts)
             # whole-batch delta+varbyte: absolute value at group starts,
             # mod-2^64 gaps elsewhere (sorted within group => exact)
             au = cols["doc_id"].to_numpy().astype(np.uint64)
@@ -633,7 +604,6 @@ def build_blocks(
                     pc.take(cols["term_lc"], heads),
                     pc.take(cols["block_id"], heads),
                     pa.array((ends - starts).astype(np.int64)),
-                    pa.array(max_tfn),
                     vb,
                     pa.ListArray.from_arrays(offs, cols["variant"]),
                     pa.ListArray.from_arrays(offs, pc.cast(cols["tf"], pa.int32())),
@@ -676,36 +646,12 @@ def build_blocks(
 
     packed_schema = (
         "context string, shard int, term_lc string, block_id int, "
-        "n_postings long, max_tfn double, doc_ids_vb binary, "
+        "n_postings long, doc_ids_vb binary, "
         "variants array<string>, tfs array<int>, dls array<int>, df long"
     )
-    packed = pre.mapInArrow(pack_arrow, schema=packed_schema)
-    # finish the block-max bound JVM-side on the block-granular rows:
-    # max_bm25 = idf * max_tfn. df rode the pack shuffle and n_docs is
-    # a per-context literal from the already-collected context stats —
-    # the r5 form re-joined BOTH from fresh aggregations over the
-    # postings table, adding two full corpus scans to the blocks job.
-    # (n - df) is integral and < 2^53, so the double literal keeps idf
-    # bit-identical to the former long-column arithmetic.
-    n_docs_lit: Column | None = None
-    for cx, nd in sorted(n_docs_by_cx.items()):
-        lit = F.lit(float(nd))
-        n_docs_lit = (
-            lit
-            if n_docs_lit is None
-            else F.when(F.col("context") == cx, lit).otherwise(n_docs_lit)
-        )
-    if n_docs_lit is None:  # no contexts -> empty postings
-        n_docs_lit = F.lit(0.0)
-    return (
-        packed
-        .withColumn("n_blocks", n_blocks)
-        .withColumn("max_bm25", idf_col(F.col("df"), n_docs_lit) * F.col("max_tfn"))
-        .select(
-            "context", "shard", "term_lc", "block_id", "n_postings",
-            "max_bm25", "df", "n_blocks", "doc_ids_vb", "variants",
-            "tfs", "dls",
-        )
+    return pre.mapInArrow(pack_arrow, schema=packed_schema).select(
+        "context", "shard", "term_lc", "block_id", "n_postings", "df",
+        "doc_ids_vb", "variants", "tfs", "dls",
     )
 
 
@@ -714,12 +660,10 @@ def commit_blocks(
     cfg: BuildConfig, key: str,
 ) -> dict:
     """Build the blocks artifact from ``postings`` and commit it in the
-    (context, shard) layout the WAND reader prunes by. The stats inputs
-    are in-job aggregations with the same expressions as the committed
-    stats tables, so the artifact is byte-identical either way."""
-    blocks = build_blocks(
-        spark, postings, term_stats(postings), context_stats(postings), cfg
-    )
+    (context, shard) layout the WAND reader prunes by. The df input is
+    an in-job aggregation with term_stats' expression, so the artifact
+    is byte-identical to one built from the committed table."""
+    blocks = build_blocks(spark, postings, term_stats(postings), cfg)
     return catalog.commit(
         blocks, "blocks", key,
         partition_by=["context", "shard"],

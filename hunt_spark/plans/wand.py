@@ -1,76 +1,38 @@
-"""Block-max-WAND-style pruned BM25 top-k over the compressed blocks
-artifact (SURVEY.md §4.3.3; north-star "block-max WAND over
-posting-list intersections").
+"""WAND-shaped BM25 scoring over the compressed blocks artifact
+(SURVEY.md §4.3.3).
 
-The reference scores candidates with a bounded priority queue over
-in-memory posting lists (hunt: Data/LimitedPriorityQueue.hs:43-101);
-at cluster scale the analogous trick is *block skipping*: the build
-stage stores, per (context, term_lc, doc-range block), a conservative
-BM25 upper bound ``max_bm25`` (operators/build.py build_blocks). At
-query time:
+A flat AND/OR of exact words (compile_wand) is scored from its terms'
+blocks alone: ``WandExecutor.topk_candidates`` reads them with pyarrow
+and decodes them on the driver, one ``score_block`` call per block, with
+no Spark job (a hot term of a small index decodes in milliseconds, where
+a job costs around a second). Every posting of the query terms is read:
+the reply's total (Hunt's ``lrCount``, ApiDocument.hs:60,72-81) counts
+every match, so skipping blocks would save no work. Queries whose blocks
+hold more than ``DRIVER_POSTINGS`` postings run the full plan instead.
 
-1. collect the query terms' block *stats* to the driver — BOUNDED:
-   if the terms' total block count exceeds ``max_stats_rows`` (a hot
-   term at 10^12 docs has millions of blocks), stats are pre-
-   aggregated executor-side into block *groups* of S consecutive
-   block ids (S chosen so collected rows <= the cap) and pruning runs
-   at group granularity. A group's max is >= each member block's max,
-   so group-level pruning is still exact — only less selective;
-2. seed a threshold θ: decode only the highest-ub blocks covering
-   ≥ seed_factor·k postings, aggregate, take the k-th best partial
-   score (for OR, any partial score is a lower bound of the true
-   score, so θ is valid);
-3. prune: block B of term t can be skipped iff
-   ``ub(B) = Σ_t' boost_t' · max(max_bm25 of t'-blocks overlapping
-   B's doc-range) < θ`` — ub(B) bounds the *total* score of every doc
-   in B, so no top-k doc is lost (proof: doc d ∈ B has all its query
-   postings in blocks overlapping B's range; each contribution ≤ the
-   per-term overlap max). For AND, a block whose range no block of
-   some other term overlaps is pruned outright (its docs cannot
-   satisfy the conjunction);
-4. scan the surviving blocks once (Spark mapInPandas varbyte decode,
-   vectorized), aggregate per doc, top-k.
-
-A query whose terms' blocks hold at most ``DRIVER_POSTINGS`` postings
-skips all of that: ``WandExecutor.driver_scores`` reads those blocks
-with pyarrow and decodes them on the driver with the same per-block
-kernel, with no Spark job (a hot term of a small index decodes in
-milliseconds, where a job costs around a second).
-
-Exactness: any doc whose computed score ≥ θ has no pruned block
-(else its true score — and hence its computed partial — would be
-< θ), so its computed score is exact; and ≥ k seed docs score ≥ θ.
-Rank-identity with the unpruned plan is pinned by tests.
-
-Block intervals use exact integer arithmetic over the u32 = top-32-
-bits doc-hash space (build-side block_id = (u32·n_blocks) >> 32), so
-driver-side overlap checks cannot drift at boundaries.
+Scores are bit-identical to the full plan's (score_block), and the
+per-doc sum adds the legs in query order, so docs with equal term
+frequencies and lengths score equal and url orders them.
 """
 
 from __future__ import annotations
 
-import functools
 import threading
-from bisect import bisect_right
-from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from hunt_spark.functions.varbyte import delta_varbyte_decode
 from hunt_spark.plans.ast import QBoost, QFullWord, QSeq
 
-U32_SPAN = 1 << 32
 # the most postings a query's blocks may hold to be decoded and scored
-# on the driver (driver_scores); above it the distributed executor runs.
-# On a 4-core local[4] host, over a 65,536-doc index, a search_page of
-# 2^14..2^20 postings took 0.04-0.95 s on the driver against 1.7-10.0 s
-# distributed, and grew the processes' peak RSS by 165 MB against
-# 4,650 MB at 2^20; the driver decode grows linearly, and the largest
-# size measured is the bound
+# on the driver (topk_candidates); above it the full plan runs. On a
+# 4-core local[4] host, over a 65,536-doc index, a search_page of 2^18
+# and 2^20 postings took 0.34 and 1.12 s on the driver against 2.9 and
+# 12.6 s through the full plan; the driver decode grows linearly (and
+# its memory with it), and the largest size measured is the bound
 DRIVER_POSTINGS = 1 << 20
 
 
@@ -121,47 +83,6 @@ def compile_wand(q) -> tuple[str, list[WandLeg]] | None:
     return None
 
 
-def _block_range(bid: int, nb: int) -> tuple[int, int]:
-    """Half-open u32 interval [lo, hi) of docs with (u32*nb)>>32 == bid."""
-    lo = -((-bid * U32_SPAN) // nb)          # ceil(bid * 2^32 / nb)
-    hi = -((-(bid + 1) * U32_SPAN) // nb)
-    return lo, hi
-
-
-class _TermBlocks:
-    """Sorted block-group ranges + maxima for one (context, term_lc).
-
-    Each row is a group of >= 1 consecutive block ids [bid_lo, bid_hi]
-    (single blocks when the stats fit the driver cap un-grouped); the
-    group's doc-hash interval is the union of its members' intervals
-    and its max is the group max — a conservative superset, so pruning
-    against it is exact at any granularity."""
-
-    def __init__(self, rows: list[dict]):
-        rows = sorted(rows, key=lambda r: r["bid_lo"])
-        self.bid_lo = [r["bid_lo"] for r in rows]
-        self.bid_hi = [r["bid_hi"] for r in rows]
-        self.nb = rows[0]["n_blocks"]
-        self.lo = [_block_range(r["bid_lo"], r["n_blocks"])[0] for r in rows]
-        self.hi = [_block_range(r["bid_hi"], r["n_blocks"])[1] for r in rows]
-        self.maxima = [r["max_bm25"] for r in rows]
-        self.n_postings = [r["n_postings"] for r in rows]
-
-    def overlap_max(self, lo: int, hi: int) -> float | None:
-        """max(max_bm25) over blocks overlapping [lo, hi), None if none."""
-        i = bisect_right(self.lo, lo) - 1
-        if i >= 0 and self.hi[i] <= lo:
-            i += 1
-        i = max(i, 0)
-        best = None
-        while i < len(self.lo) and self.lo[i] < hi:
-            if self.hi[i] > lo:
-                m = self.maxima[i]
-                best = m if best is None or m > best else best
-            i += 1
-        return best
-
-
 def score_block(
     leg: WandLeg, vb: bytes, variants, tfs, dls, idf: float, avg_dl: float
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -195,85 +116,13 @@ def score_block(
     return ids, sim * idf * tfn * leg.boost
 
 
-def _decode(
-    blocks: DataFrame,
-    legs: list[WandLeg],
-    keep: dict[tuple[str, str], list[tuple[int, int]]],
-    idf: dict[tuple[str, str], float],
-    avg_dl: dict[str, float],
-) -> DataFrame:
-    """Scan the kept ((context, term_lc) -> block_id set) blocks; emit per
-    (context, doc_id, term_lc) the similarity-weighted boosted BM25
-    contribution (max over case variants — mirrors compiler._scan), one
-    ``score_block`` call per block row."""
-    conds = None
-    for (cx, t), ivs in keep.items():
-        ic = None
-        for lo_b, hi_b in ivs:
-            c = F.col("block_id").between(int(lo_b), int(hi_b))
-            ic = c if ic is None else (ic | c)
-        # pruning runs per context (per-cx theta) — the predicate must
-        # keep that key, or intervals kept for context B re-admit the
-        # same term's pruned blocks in context A (exact but unpruned)
-        c = (F.col("context") == cx) & (F.col("term_lc") == t) & ic
-        conds = c if conds is None else (conds | c)
-    sel = blocks.filter(conds).select(
-        "context", "term_lc", "doc_ids_vb", "variants", "tfs", "dls"
-    )
-    by_lc = {x.term_lc: x for x in legs}
-
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ctx_o, doc_o, lc_o, sc_o = [], [], [], []
-            for ctx, lc, vb, variants, tfs, dls in zip(
-                b["context"], b["term_lc"], b["doc_ids_vb"],
-                b["variants"], b["tfs"], b["dls"],
-            ):
-                ids, s = score_block(
-                    by_lc[lc], vb, variants, tfs, dls, idf[(ctx, lc)], avg_dl[ctx]
-                )
-                if len(ids) == 0:
-                    continue
-                ctx_o.extend([ctx] * len(ids))
-                doc_o.append(ids)
-                lc_o.extend([lc] * len(ids))
-                sc_o.append(s)
-            yield pd.DataFrame(
-                {
-                    "context": pd.Series(ctx_o, dtype=object),
-                    "doc_id": np.concatenate(doc_o) if doc_o else np.array([], dtype=np.int64),
-                    "term_lc": pd.Series(lc_o, dtype=object),
-                    "contrib": np.concatenate(sc_o) if sc_o else np.array([], dtype=np.float64),
-                }
-            )
-
-    return sel.mapInPandas(
-        go, schema="context string, doc_id long, term_lc string, contrib double"
-    )
-
-
-def _aggregate(decoded: DataFrame, op: str, n_legs: int) -> DataFrame:
-    """(context, doc_id, term_lc, contrib) -> (context, doc_id, score).
-    Per (doc, term) the max over case variants (compiler._scan), then
-    OR: sum of legs; AND: sum with presence of all legs required."""
-    per_term = decoded.groupBy("context", "doc_id", "term_lc").agg(
-        F.max("contrib").alias("contrib")
-    )
-    agg = per_term.groupBy("context", "doc_id").agg(
-        F.sum("contrib").alias("score"), F.count("*").alias("_n")
-    )
-    if op == "and":
-        agg = agg.filter(F.col("_n") == n_legs)
-    return agg.select("context", "doc_id", "score")
-
-
 def _aggregate_np(
     op: str, legs: list[WandLeg], hits: dict[str, list[tuple]]
 ) -> tuple[np.ndarray, np.ndarray]:
-    """_aggregate's rule over decoded (doc ids, contributions) per
-    term_lc, for one context: the max over case variants per (doc,
-    term), then the sum of the legs in query order; AND keeps the docs
-    every leg holds. Returns (doc ids ascending, scores)."""
+    """(doc ids ascending, scores) from decoded (doc ids, contributions)
+    per term_lc, for one context, by compiler._scan's rule: the max over
+    case variants per (doc, term), then the sum of the legs in query
+    order; AND keeps the docs every leg holds."""
     per_leg = []
     for leg in legs:
         parts = [p for p in hits.get(leg.term_lc, []) if len(p[0])]
@@ -300,41 +149,18 @@ def _aggregate_np(
     return docs, score
 
 
-def _coalesce(ivs: list[tuple[int, int]], cap: int = 256) -> list[tuple[int, int]]:
-    """Merge adjacent/overlapping [lo, hi] block-id intervals; if more
-    than ``cap`` disjoint runs remain, widen to the convex hull — a
-    superset keep is always exact (extra blocks only add candidates
-    whose scores are computed exactly), it just scans more."""
-    ivs = sorted(ivs)
-    out = [list(ivs[0])]
-    for lo, hi in ivs[1:]:
-        if lo <= out[-1][1] + 1:
-            out[-1][1] = max(out[-1][1], hi)
-        else:
-            out.append([lo, hi])
-    if len(out) > cap:
-        return [(out[0][0], out[-1][1])]
-    return [(a, b) for a, b in out]
-
-
 class WandExecutor:
     def __init__(
         self,
         spark: SparkSession,
-        blocks: Callable[[], DataFrame],
         n_shards: int,
         n_docs: dict[str, float],
         avg_dl: dict[str, float],
         path: str,
         doc_weight: float,
-        seed_factor: int = 4,
-        max_stats_rows: int = 65536,
     ):
         self.spark = spark
-        # reads the blocks table when the distributed route first needs
-        # it (the driver route reads ``path`` with pyarrow instead)
-        self._read_blocks = blocks
-        # the blocks snapshot's directory, for driver_scores
+        # the blocks snapshot's directory
         self.path = path
         # the weight every doc carries (WAND requires one weight)
         self.doc_weight = doc_weight
@@ -343,22 +169,13 @@ class WandExecutor:
         self.n_shards = n_shards
         self.n_docs = {k: float(v) for k, v in n_docs.items()}
         self.avg_dl = {k: float(v) for k, v in avg_dl.items()}
-        self.seed_factor = seed_factor
-        # hard bound on driver-collected stats rows: a stopword term at
-        # 10^12 docs has df/4096 ~ millions of blocks; grouping keeps
-        # the collect O(max_stats_rows) regardless of df
-        self.max_stats_rows = max_stats_rows
         self._local = threading.local()
-
-    @functools.cached_property
-    def blocks(self) -> DataFrame:
-        return self._read_blocks()
 
     @property
     def last_stats(self) -> dict | None:
-        """Pruning record of this thread's last topk_candidates or
-        driver_scores call (None before the first): requests run on
-        their own server threads, so one shared record would hold
+        """Record of this thread's last topk_candidates call, the blocks
+        read and postings decoded (None before the first): requests run
+        on their own server threads, so one shared record would hold
         whichever finished last."""
         return getattr(self._local, "stats", None)
 
@@ -399,14 +216,15 @@ class WandExecutor:
             self._dataset = ds.dataset(self.path, format="parquet", partitioning=part)
         return self._dataset
 
-    def driver_scores(
+    def topk_candidates(
         self, op: str, legs: list[WandLeg], contexts: tuple
     ) -> tuple[np.ndarray, np.ndarray] | None:
         """(doc ids, scores) of every matching doc, decoded and
         aggregated on the driver with no Spark job; None when the query
         terms' blocks hold more than DRIVER_POSTINGS postings. The scores
-        are _decode + _aggregate's, in one context (the engine's gate
-        opens WAND on single-context indexes only).
+        are the full plan's eval before the context collapse, in one
+        context (the engine's gate opens WAND on single-context indexes
+        only); the caller picks the top k.
 
         The directory partitions prune contexts and shards, the term_lc
         filter uses the row groups' statistics (the blocks are sorted by
@@ -427,6 +245,7 @@ class WandExecutor:
                 dset.to_table(columns=["n_postings"], filter=flt)["n_postings"]
             ).as_py() or 0
         if n > DRIVER_POSTINGS:
+            self.last_stats = {"blocks_read": 0, "postings_decoded": 0}
             return None
         hits: dict[str, list[tuple]] = {}
         n_blocks = 0
@@ -456,170 +275,5 @@ class WandExecutor:
                     by_lc[lc], vb, variants, tfs, dls,
                     idf[(ctx, lc)], self.avg_dl[ctx],
                 ))
-        self.last_stats = {
-            "route": "driver", "blocks_read": n_blocks, "postings_decoded": n,
-        }
+        self.last_stats = {"blocks_read": n_blocks, "postings_decoded": n}
         return _aggregate_np(op, legs, hits)
-
-    def _collect_stats(self, bl: DataFrame) -> tuple[list, int]:
-        """Block(-group) stats rows bounded by max_stats_rows.
-
-        Common case (cold terms): one probe collect with LIMIT cap+1 —
-        if everything fits, done, single job. Hot-term case: a tiny
-        count aggregate picks the grouping factor S, then an executor-
-        side aggregate collapses S consecutive block ids per collected
-        row, so the driver never holds more than ~max_stats_rows."""
-        sel = bl.select(
-            "context", "term_lc",
-            F.col("block_id").alias("bid_lo"),
-            F.col("block_id").alias("bid_hi"),
-            "n_blocks", "max_bm25", "n_postings", "df",
-        )
-        rows = sel.limit(self.max_stats_rows + 1).collect()
-        if len(rows) <= self.max_stats_rows:
-            return rows, 1
-        total = bl.count()
-        gran = -(-total // self.max_stats_rows)  # ceil
-        rows = (
-            bl.groupBy(
-                "context", "term_lc",
-                (F.col("block_id") / F.lit(gran)).cast("long").alias("_g"),
-            )
-            .agg(
-                F.min("block_id").alias("bid_lo"),
-                F.max("block_id").alias("bid_hi"),
-                F.first("n_blocks").alias("n_blocks"),
-                F.max("max_bm25").alias("max_bm25"),
-                F.sum("n_postings").alias("n_postings"),
-                F.max("df").alias("df"),
-            )
-            .drop("_g")
-            .collect()
-        )
-        return rows, gran
-
-    def topk_candidates(
-        self, op: str, legs: list[WandLeg], k: int, contexts: tuple
-    ) -> DataFrame:
-        """Return (context, doc_id, score) containing every doc whose
-        score can reach the global top-k (exact scores)."""
-        terms = [x.term_lc for x in legs]
-        bl = self.blocks.filter(
-            F.col("context").isin(list(contexts))
-            & F.col("shard").isin(self._shards_for(terms))  # partition pruning
-            & F.col("term_lc").isin(terms)
-        )
-        stats, gran = self._collect_stats(bl)
-        empty = self.spark.createDataFrame(
-            [], "context string, doc_id long, score double"
-        )
-        if not stats:
-            return empty
-
-        boost = {x.term_lc: x.boost for x in legs}
-        # group stats per (context, term)
-        per_ct: dict[tuple[str, str], list[dict]] = {}
-        for r in stats:
-            per_ct.setdefault((r["context"], r["term_lc"]), []).append(r.asDict())
-        tb = {key: _TermBlocks(rows) for key, rows in per_ct.items()}
-        idf = {
-            (cx, t): self._idf(cx, rows[0]["df"])
-            for (cx, t), rows in per_ct.items()
-        }
-
-        keep: dict[tuple[str, str], list[tuple[int, int]]] = {}
-        n_total = n_kept = n_seed_jobs = 0
-        cxs = sorted({c for c, _ in tb})
-        for cx in cxs:
-            cx_terms = [t for c, t in tb if c == cx]
-            if op == "and" and len(cx_terms) < len(legs):
-                continue  # some term absent in this context entirely
-
-            # --- seed θ: highest-ub groups covering >= seed_factor*k postings
-            cand = []  # (ub, term, (bid_lo, bid_hi), n_postings)
-            for t in cx_terms:
-                tbk = tb[(cx, t)]
-                for j in range(len(tbk.bid_lo)):
-                    lo, hi = tbk.lo[j], tbk.hi[j]
-                    ub = 0.0
-                    dead = False
-                    for t2 in cx_terms:
-                        m = (
-                            tbk.maxima[j]
-                            if t2 == t
-                            else tb[(cx, t2)].overlap_max(lo, hi)
-                        )
-                        if m is None:
-                            if op == "and":
-                                dead = True
-                                break
-                            continue
-                        ub += boost[t2] * m
-                    if not dead:
-                        cand.append(
-                            (ub, t, (tbk.bid_lo[j], tbk.bid_hi[j]), tbk.n_postings[j])
-                        )
-            n_total += sum(len(tb[(cx, t)].bid_lo) for t in cx_terms)
-            if not cand:
-                continue
-            cand.sort(key=lambda x: -x[0])
-
-            theta = float("-inf")
-            if op == "or" and len(cand) > 1:
-                seed, covered = [], 0
-                for ub, t, iv, np_ in cand:
-                    seed.append((t, iv))
-                    covered += np_
-                    if covered >= self.seed_factor * k:
-                        break
-                # the seed θ-job only pays when pruning can remove real
-                # work: if the non-seed remainder is small relative to
-                # what the seed job itself must decode, skip the extra
-                # Spark job and scan everything in the main pass (the
-                # cold-query job-count fix — a seed covering ~all
-                # candidate postings used to cost one full extra job to
-                # prune almost nothing)
-                rest = sum(np_ for _, _, _, np_ in cand) - covered
-                if len(seed) < len(cand) and rest > covered:
-                    seed_keep: dict[tuple[str, str], list[tuple[int, int]]] = {}
-                    for t, iv in seed:
-                        seed_keep.setdefault((cx, t), []).append(iv)
-                    seed_keep = {
-                        key: _coalesce(v) for key, v in seed_keep.items()
-                    }
-                    part = _aggregate(
-                        _decode(
-                            bl.filter(F.col("context") == cx), legs, seed_keep,
-                            idf, self.avg_dl,
-                        ),
-                        "or",
-                        len(legs),
-                    )
-                    n_seed_jobs += 1
-                    top = part.orderBy(F.desc("score")).limit(k).collect()
-                    if len(top) >= k:
-                        theta = top[-1]["score"]  # partial => lower bound
-
-            # 1e-9 slack: block maxima are numpy doubles, full-plan
-            # scores JVM doubles — ulp-level drift must never prune a
-            # true top-k block
-            for ub, t, iv, _np in cand:
-                if ub >= theta - 1e-9:
-                    keep.setdefault((cx, t), []).append(iv)
-                    n_kept += 1
-
-        self.last_stats = {
-            "route": "distributed",
-            "blocks_total": n_total,
-            "blocks_scanned": n_kept,
-            "pruned_frac": round(1 - n_kept / n_total, 4) if n_total else 0.0,
-            "granularity": gran,
-            "stats_rows_collected": len(stats),
-            "seed_jobs": n_seed_jobs,
-        }
-        if not keep:
-            return empty
-        keep = {key: _coalesce(v) for key, v in keep.items()}
-        return _aggregate(
-            _decode(bl, legs, keep, idf, self.avg_dl), op, len(legs)
-        )

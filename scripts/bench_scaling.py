@@ -763,9 +763,8 @@ def main() -> None:
         "varbyte pack;",
         "- per-task memory is bounded: doc-hash-range blocks are capped "
         "at block_size postings, the pack kernel carries at most one "
-        "group between batches, hot terms are salted across writers, "
-        "and WAND's driver-side stats collect is hard-capped "
-        "(executor-side block grouping beyond max_stats_rows);",
+        "group between batches, and hot terms are salted across "
+        "writers;",
         "- the work per stage is independent of the core count "
         "(identical plans, identical shuffle layout keyed by context/"
         "shard/salt); nothing in the job serializes on the driver, so "

@@ -171,14 +171,11 @@ def test_blocks_pack_round_trips_postings(spark):
     """Each blocks row decodes back to its (context, term_lc, block_id)
     group of postings — doc ids from the delta+varbyte buffer, terms
     from ``variants`` (null = term_lc), tf and dl from ``tfs``/``dls``
-    — and max_bm25 is idf x the block's max tf_norm, computed here in
-    numpy with the build's expression."""
-    import math
+    — and df is the term's document frequency."""
     from collections import defaultdict
 
     from hunt_spark.operators.build import (
-        BM25_B, BM25_K1, BuildConfig, build_blocks, context_stats,
-        postings_from_contexts, term_stats,
+        BuildConfig, build_blocks, postings_from_contexts, term_stats,
     )
 
     docs = corpus_df(spark, 150, partitions=2).withColumn(
@@ -186,17 +183,13 @@ def test_blocks_pack_round_trips_postings(spark):
     )
     cfg = BuildConfig(n_shards=4, block_size=64)
     p = postings_from_contexts(docs, {"text": F.col("text")}, cfg).cache()
-    blocks = build_blocks(
-        spark, p, term_stats(p), context_stats(p), cfg
-    ).collect()
+    blocks = build_blocks(spark, p, term_stats(p), cfg).collect()
     post = p.select("context", "term", "term_lc", "doc_id", "tf", "dl").collect()
     p.unpersist()
 
     df = defaultdict(set)
     for r in post:
         df[(r["context"], r["term_lc"])].add(r["doc_id"])
-    n_docs = len({r["doc_id"] for r in post})
-    avg_dl = sum(r["tf"] for r in post) / n_docs
 
     def block_of(doc_id, n_blocks):
         u32 = ((doc_id >> 32) & 0xFFFFFFFF) ^ 0x80000000
@@ -209,7 +202,7 @@ def test_blocks_pack_round_trips_postings(spark):
         want[key].append((r["doc_id"], r["term"], r["tf"], r["dl"]))
 
     assert len(blocks) == len(want)
-    assert any(b["n_blocks"] > 1 for b in blocks)
+    assert any(b["block_id"] > 0 for b in blocks)
     for b in blocks:
         key = (b["context"], b["term_lc"], b["block_id"])
         ids = [int(x) for x in delta_varbyte_decode(bytes(b["doc_ids_vb"]))]
@@ -219,17 +212,7 @@ def test_blocks_pack_round_trips_postings(spark):
             for i, v, tf, dl in zip(ids, b["variants"], b["tfs"], b["dls"])
         ]
         assert sorted(got) == sorted(want[key]), key
-        d = len(df[(b["context"], b["term_lc"])])
-        assert b["df"] == d and b["n_blocks"] == max(1, -(-d // 64))
-        tf = np.asarray(b["tfs"], dtype=np.float64)
-        dl = np.asarray(b["dls"], dtype=np.float64)
-        tfn = (tf * (BM25_K1 + 1.0)) / (
-            tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avg_dl)
-        )
-        idf = np.log(1.0 + (float(n_docs) - d + 0.5) / (d + 0.5))
-        # numpy's log and the JVM's StrictMath.log disagree in the last
-        # bit for some arguments (40 of d = 1..150 at N = 150)
-        assert math.isclose(b["max_bm25"], idf * tfn.max(), rel_tol=1e-14), key
+        assert b["df"] == len(df[(b["context"], b["term_lc"])])
 
 
 def test_context_stats_single_shuffle_equals_per_doc_form(engine):

@@ -1,8 +1,8 @@
-"""The blocks stage re-derives term/context stats in-job (build.py
-_commit_blocks; engine.py compact) instead of waiting on the committed
-term_stats/context_stats stages — that removed two commit boundaries
-from the build's critical path. The claim that funds it: the artifact
-is byte-identical either way. Pin that claim, binary columns included.
+"""The blocks stage re-derives term stats in-job (build.py
+commit_blocks; engine.py compact) instead of waiting on the committed
+term_stats stage — that removed a commit boundary from the build's
+critical path. The claim that funds it: the artifact is byte-identical
+either way. Pin that claim, binary columns included.
 """
 
 from __future__ import annotations
@@ -10,9 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hunt_spark.engine import HuntEngine
-from hunt_spark.operators.build import (
-    BuildConfig, build_blocks, context_stats, term_stats,
-)
+from hunt_spark.operators.build import BuildConfig, build_blocks, term_stats
 from hunt_spark.sources.corpus import corpus_df
 
 
@@ -26,15 +24,9 @@ def test_blocks_from_in_job_stats_byte_identical(spark, tmp_path):
 
     postings = eng.catalog.read(spark, "postings")
     committed = build_blocks(
-        spark, postings,
-        eng.catalog.read(spark, "term_stats"),
-        eng.catalog.read(spark, "context_stats"),
-        eng.cfg,
+        spark, postings, eng.catalog.read(spark, "term_stats"), eng.cfg
     )
-    in_job = build_blocks(
-        spark, postings, term_stats(postings), context_stats(postings),
-        eng.cfg,
-    )
+    in_job = build_blocks(spark, postings, term_stats(postings), eng.cfg)
 
     def rows(df):
         return sorted(

@@ -1,10 +1,9 @@
-"""Block-max WAND executor: rank- and score-identity vs the full plan,
-plus evidence that pruning actually skips blocks (the whole point).
+"""The WAND scorer: rank- and score-identity vs the full plan.
 
 Mirrors the reference's guarantee that its bounded-priority-queue top-k
 (hunt: Data/LimitedPriorityQueue.hs:43-101) returns exactly the global
-best k — here the pruned candidate set must reproduce the unpruned
-ranking bit-for-bit on doc ids and to 1e-9 on scores.
+best k — here the blocks-decoded scores must reproduce the full plan's
+ranking bit-for-bit on doc ids, ties included, and its scores.
 """
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ NON_WAND = ["bra", '"pinky and the brain"', "[ba TO bd]", "cat AND NOT dog"]
 
 @pytest.fixture(scope="module")
 def wand_engine(spark, tmp_path_factory):
-    """Single-context index with tiny blocks so pruning has teeth."""
+    """Single-context index with tiny blocks, so terms span several."""
     root = str(tmp_path_factory.mktemp("wand_index"))
     eng = HuntEngine(
         spark, root, BuildConfig(n_shards=4, salt_buckets=2, block_size=64)
@@ -70,19 +69,6 @@ def test_wand_matches_full_plan(wand_engine, q):
         assert math.isclose(a["score"], b["score"], rel_tol=0, abs_tol=1e-9)
 
 
-def test_wand_actually_prunes(wand_engine):
-    # k=1 on the hottest term: θ == the global best score, so every
-    # block whose max_bm25 is below the seed block's max is skipped.
-    # (At bench/cluster scale pruning bites at realistic k too — small
-    # corpora have near-uniform block maxima; see BENCH/BASELINE.md.)
-    full = wand_engine.search("'the'", k=1, use_wand=False).collect()
-    pruned = wand_engine.search("'the'", k=1, use_wand=True).collect()
-    assert [r["doc_id"] for r in pruned] == [r["doc_id"] for r in full]
-    st = wand_engine.wand().last_stats
-    assert st["blocks_total"] > 4
-    assert st["blocks_scanned"] < st["blocks_total"], st
-
-
 def test_wand_fallback_on_multi_context(engine):
     # session engine has two contexts -> gate must route to the full plan
     assert engine.wand() is None
@@ -95,12 +81,24 @@ def test_wand_rejects_unshaped_when_forced(wand_engine):
         wand_engine.search('"pinky and the brain"', k=K, use_wand=True)
 
 
-def test_wand_forced_names_gate_reason_when_unavailable(engine):
+def test_wand_forced_names_gate_reason_when_unavailable(
+    engine, wand_engine, monkeypatch
+):
     # WAND-able shape, but the session engine's gate is closed
     # (multi-context index): the error must say why, not claim the
     # query shape is wrong
     with pytest.raises(RuntimeError, match="WAND unavailable: multi-context"):
         engine.search("'brain' OR 'pinky'", k=K, use_wand=True)
+    # an open gate, but the terms hold more postings than the driver
+    # decodes: the error names the bound
+    import hunt_spark.plans.wand as wand_mod
+
+    monkeypatch.setattr(wand_mod, "DRIVER_POSTINGS", 0)
+    wand_engine._plan_cache.clear()
+    with pytest.raises(
+        RuntimeError, match="WAND unavailable: .*DRIVER_POSTINGS = 0 postings"
+    ):
+        wand_engine.search("'brain'", k=K, use_wand=True)
 
 
 def test_xxhash64_driver_twin_matches_jvm(spark):
@@ -119,60 +117,6 @@ def test_xxhash64_driver_twin_matches_jvm(spark):
     }
     for w in words:
         assert got[w] == spark_xxhash64(w), w
-
-
-@pytest.mark.parametrize("q", ["'the'", "'the' OR 'brain'", "'the' 'and' 'of'"])
-def test_wand_bounded_stats_collect_identical(wand_engine, q):
-    """Force a tiny driver cap: stats must be grouped executor-side
-    (granularity > 1, rows <= cap + slack) and results must stay
-    rank+score identical — group-level pruning is exact by
-    construction (group max >= member max)."""
-    from hunt_spark.plans.wand import WandExecutor, compile_wand as cw
-
-    wx = wand_engine.wand()
-    tiny = WandExecutor(
-        wand_engine.spark, lambda: wx.blocks, wand_engine.cfg.n_shards,
-        wx.n_docs, wx.avg_dl, wx.path, wx.doc_weight, max_stats_rows=4,
-    )
-    op, legs = cw(parse_query(q))
-    full = wand_engine.search(q, k=K, use_wand=False).collect()
-    cand = tiny.topk_candidates(op, legs, K, ("text",))
-    got = (
-        wand_engine.compiler().collapse_contexts(cand)
-        .join(wand_engine.doc_meta().select("doc_id", "url", "weight"), "doc_id")
-        .select("doc_id", (F.col("score") * F.col("weight")).alias("score"), "url")
-        .orderBy(F.desc("score"), F.asc("url"))
-        .limit(K)
-        .collect()
-    )
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in full]
-    for a, b in zip(got, full):
-        assert math.isclose(a["score"], b["score"], rel_tol=0, abs_tol=1e-9)
-    st = tiny.last_stats
-    assert st["granularity"] > 1, st
-    # the bound: grouped rows <= cap + one partial group per (cx, term)
-    assert st["stats_rows_collected"] <= 4 + len(legs), st
-
-
-def test_or_seed_job_folded_when_upside_small(wand_engine):
-    # the θ-seed is an extra Spark job that only pays if it can prune
-    # real work; when seed coverage (>= seed_factor*k postings) already
-    # spans most candidates, the executor must skip it and scan
-    # everything in the main pass — same results, one job fewer
-    eng = wand_engine
-    total = (
-        eng.compiler()
-        .postings.filter(F.col("term_lc").isin(["the", "brain"]))
-        .count()
-    )
-    k_big = max(2, int(total * 0.15))  # seed covers ~60% -> rest < covered
-    full = eng.search("'the' OR 'brain'", k=k_big, use_wand=False).collect()
-    pruned = eng.search("'the' OR 'brain'", k=k_big, use_wand=True).collect()
-    assert [r["doc_id"] for r in pruned] == [r["doc_id"] for r in full]
-    assert eng.wand().last_stats["seed_jobs"] == 0
-    # ...while a genuinely prunable query (tiny k, hot term) still seeds
-    eng.search("'the' OR 'brain'", k=1, use_wand=True).collect()
-    assert eng.wand().last_stats["seed_jobs"] == 1
 
 
 def test_wand_scores_bit_identical_to_full_plan(spark, tmp_path_factory):
@@ -211,6 +155,65 @@ def test_wand_scores_bit_identical_to_full_plan(spark, tmp_path_factory):
         ], q
 
 
+TIE_DOCS = 300
+
+
+@pytest.fixture(scope="module")
+def tie_engine(spark, tmp_path_factory):
+    """Doc i holds w0..w7 with tf 1 + (i + j) % 3 and a word of its own,
+    so the docs fall in three classes of 100 with equal tf vectors and
+    lengths, whose scores are equal: the page is decided by url."""
+    def text(i):
+        words = []
+        for j in range(8):
+            words += [f"w{j}"] * (1 + (i + j) % 3)
+        return " ".join(words + [f"own{i:03d}"])
+
+    docs = spark.createDataFrame(
+        [(f"https://example.org/tie8/{i:03d}", text(i)) for i in range(TIE_DOCS)],
+        "url string, text string",
+    )
+    eng = HuntEngine(
+        spark, str(tmp_path_factory.mktemp("tie8")),
+        BuildConfig(n_shards=2, salt_buckets=1, block_size=64),
+    )
+    eng.build(docs, {"text": F.col("text")}, build_id="tie8")
+    return eng
+
+
+@pytest.mark.parametrize("n_terms", [3, 8])
+def test_wand_ties_ranked_by_url(tie_engine, n_terms):
+    """Every route gives the best class's first K urls. The classes are
+    ranked here in Python; within one, the order is the url's alone, so
+    no float summation order is involved in the expected page."""
+    from hunt_spark.operators.build import BM25_B, BM25_K1
+
+    def tfs(i):
+        return [1 + (i + j) % 3 for j in range(n_terms)]
+
+    def dl(i):
+        return sum(1 + (i + j) % 3 for j in range(8)) + 1
+
+    avg_dl = sum(dl(i) for i in range(TIE_DOCS)) / TIE_DOCS
+    # every w_j is in every doc: one idf for all terms, left out
+    klass = {
+        c: sum(tf * (BM25_K1 + 1) / (tf + BM25_K1 * (1 - BM25_B + BM25_B * dl(c) / avg_dl))
+               for tf in tfs(c))
+        for c in range(3)
+    }
+    best, second = sorted(klass.values(), reverse=True)[:2]
+    assert best - second > 1e-6 * best
+    top = max(klass, key=klass.get)
+    want = [f"https://example.org/tie8/{i:03d}"
+            for i in range(TIE_DOCS) if i % 3 == top][:K]
+    q = " OR ".join(f"'w{j}'" for j in range(n_terms))
+    for use_wand in (True, False):
+        got = tie_engine.search(q, k=K, use_wand=use_wand).collect()
+        assert [r["url"] for r in got] == want, use_wand
+    rows, total = tie_engine.search_page(q, k=K)
+    assert [r["url"] for r in rows] == want and total == TIE_DOCS
+
+
 def _page_matches_full_plan(eng, q):
     rows, total = eng.search_page(q, k=K)
     full = eng.search(q, k=K, use_wand=False).collect()
@@ -224,20 +227,20 @@ def _page_matches_full_plan(eng, q):
 
 @pytest.mark.parametrize("q", WAND_QUERIES)
 def test_search_page_routes_match_full_plan(wand_engine, q, monkeypatch):
-    """search_page answers WAND-shaped queries on the driver; with the
-    postings cap at 0 the same requests take the distributed executor.
-    Both routes give the full plan's page and its exact total."""
+    """search_page answers WAND-shaped queries on the driver, building
+    no plan; with the postings cap at 0 the same requests run the full
+    plan. Both routes give the full plan's page and its exact total."""
     import hunt_spark.plans.wand as wand_mod
 
+    key = (q, K, 0, "auto", ())
+    wand_engine._plan_cache.pop(key, None)
     _page_matches_full_plan(wand_engine, q)
-    assert wand_engine.wand().last_stats["route"] == "driver"
+    assert key not in wand_engine._plan_cache
+    decoded = wand_engine.wand().last_stats["postings_decoded"]
     monkeypatch.setattr(wand_mod, "DRIVER_POSTINGS", 0)
     _page_matches_full_plan(wand_engine, q)
-    st = wand_engine.wand().last_stats
-    if st["route"] == "driver":  # a query without postings stays there
-        assert st["postings_decoded"] == 0
-    else:
-        assert st["route"] == "distributed"
+    # a query without postings stays on the driver
+    assert (key in wand_engine._plan_cache) == (decoded > 0)
 
 
 def test_last_stats_is_per_thread(wand_engine):
@@ -245,13 +248,13 @@ def test_last_stats_is_per_thread(wand_engine):
 
     wx = wand_engine.wand()
     op, legs = compile_wand(parse_query("'brain'"))
-    wx.driver_scores(op, legs, ("text",))
+    wx.topk_candidates(op, legs, ("text",))
     mine = wx.last_stats
     seen = []
     t = threading.Thread(target=lambda: seen.append(wx.last_stats))
     t.start()
     t.join()
-    assert seen == [None] and mine["route"] == "driver"
+    assert seen == [None]
     assert mine["postings_decoded"] > 0 and mine["blocks_read"] > 0
 
 
@@ -392,7 +395,8 @@ def test_driver_route_on_emptied_index(spark, tmp_path_factory):
         assert eng.wand() is not None
         assert eng.search_page("'alpha'", k=K) == ([], 0)
         assert eng.search_page("'alpha'", k=K, fields=["description"]) == ([], 0)
-        assert eng.wand().last_stats["route"] == "driver"
+        assert eng.wand().last_stats == {"blocks_read": 0, "postings_decoded": 0}
+        assert not eng._plan_cache  # the driver route built no plan
         assert eng.search("'alpha'", k=K, use_wand=False).collect() == []
 
 
